@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, expr, xxhash64}
 /** Benchmark main: times every registered query against
   * SPARK_GRAFT_SF_DIR and emits ONE JSON line. A failing query is
@@ -52,28 +52,8 @@ import org.apache.spark.sql.functions.{col, expr, xxhash64}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // CPU-heavy interpreted stages (array intersects, shingle
-      // transforms) are tiny by bytes; stop AQE from coalescing them
-      // onto one core
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // The Janino class cache defaults to 100 entries (STATIC conf —
-      // must be set before the session exists). The 83-query suite
-      // cycles far more generated classes than that, so every pass
-      // recompiled every query (BENCH_SELF showed 20-40 fresh
-      // compilations per query in TIMED passes, each dragging HotSpot
-      // JIT time with it — the round-7 "suite spread" signature).
-      // 4096 entries ≈ a few hundred MB of class metadata, well inside
-      // the reserved code-cache/metaspace headroom.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     // JVM/codegen warm-up so the first timed query doesn't absorb
     // session start-up cost
     spark.range(100000).selectExpr("sum(id % 7)").collect()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus scale-up generator for scale spot-checks: replicates the
@@ -54,13 +54,7 @@ object ScaleGen {
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor <= VowelPerms.size,
       s"factor $factor exceeds the ${VowelPerms.size} distinct vowel permutations")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
 
     val reps = spark.range(factor.toLong).select(col("id").cast("int").as("rep"))
     // CASE over the fixed replica list — each branch a codegen'd static

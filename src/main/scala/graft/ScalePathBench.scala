@@ -38,13 +38,7 @@ object ScalePathBench {
     val dir = args.headOption.getOrElse("/tmp/graft-sf10")
     val which = args.lift(1).getOrElse("all")
     val decadeDir = args.lift(2).getOrElse("/tmp/graft-sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
 
     val recorded =
       scala.collection.mutable.LinkedHashMap.empty[String, String]

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.streaming.{StreamingAnnIndex, StreamingImportance, StreamingLm, StreamingNearDedup, StreamingSimhashDedup}
 
@@ -8,7 +7,8 @@ import graft.streaming.{StreamingAnnIndex, StreamingImportance, StreamingLm, Str
   * the numbers behind BENCH_NOTES' "incremental-maintenance tiers"
   * table, previously measured ad hoc.
   *
-  * Protocol (cold JVM, like CcBench): index the corpus minus a holdout
+  * Protocol (cold JVM, as in BENCH_NOTES "Round-9: the distributed CC
+  * loop tier, finally scale-measured"): index the corpus minus a holdout
   * as ONE bulk batch ("bulk" — the degenerate worst case for per-batch
   * fixed cost), then append the holdout as a steady-state increment
   * ("inc" — probes the full store). For the ANN index, a query pass
@@ -28,15 +28,7 @@ object StoreBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val holdDocs = if (args.length > 1) args(1).toInt else 50
     val holdVecs = if (args.length > 2) args(2).toInt else 50
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-store-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
 
     val base = java.nio.file.Files.createTempDirectory("storebench").toString
 

@@ -582,38 +582,31 @@ object Dedup {
     * through the real anti-join, so the bloom only ever REDUCES work,
     * never changes the answer.
     *
-    * THREE filter tiers, selected by snapshot size (or forced via
-    * `ranges` / `ladderMaxRanges`):
+    * TWO filter tiers, selected by snapshot size (or forced via
+    * `ranges`):
     *  - `ranges == 1`: one corpus-wide filter (`stat.bloomFilter`,
     *    built distributed) ships as a plan constant — fine to ~10⁸
     *    keys (~120 MB at 1 % fpp).
-    *  - `1 < ranges <= ladderMaxRanges`: the snapshot is
-    *    hash-partitioned on `pmod(xxhash64(fp), ranges)` and ONE
-    *    BOUNDED filter is built per range in a single distributed pass
-    *    ([[rangeBlooms]]). The probe is one CASE over the same range
-    *    key — each row pays exactly one probe, but every executor still
-    *    receives EVERY range's bits as plan constants, so this tier is
-    *    capped: past ~16 ranges (~2 GB of plan at 1 % fpp) the ladder
-    *    itself becomes the scale-killer.
-    *  - `ranges > ladderMaxRanges`: executor-LOCAL probing
-    *    ([[probeRangeLocal]]): the batch co-partitions with the filters
+    *  - `ranges > 1`: executor-LOCAL probing ([[probeRangeLocal]]):
+    *    the snapshot is hash-partitioned on `pmod(xxhash64(fp), ranges)`
+    *    and ONE BOUNDED filter is built per range in a single
+    *    distributed pass ([[rangeBloomsRdd]]); the batch co-partitions
     *    on the same range key and each task zips with exactly ITS
     *    range's filter. No plan constant, no broadcast, no task ever
     *    holds more than one range's bits — the 10¹¹-key path. Costs one
     *    narrow (id, fp) shuffle of the batch, which is what buys the
     *    locality.
     * AUTO-selection (`ranges = 0`) is measured, not guessed
-    * (`graft.BloomBench`, BENCH_NOTES tier table): the local tier beat
-    * both plan-constant tiers at EVERY measured snapshot size ≥ 2·10⁵
-    * keys (1.9× at 2·10⁵, 6.2× at 4·10⁶, 5.0× at 2·10⁷ — constant
-    * tiers pay the filter bits in every task binary of both probe
-    * branches AND re-fingerprint the batch per branch; the local tier
-    * shuffles the slim (id, fp) projection once and reuses it), so
-    * auto dispatches local above [[LocalTierMinKeys]] with
+    * (BENCH_NOTES "Round 8: snapshot-bloom tier handover"): the local
+    * tier beat the plan-constant filters at EVERY measured snapshot
+    * size ≥ 2·10⁵ keys (1.9× at 2·10⁵, 6.2× at 4·10⁶, 5.0× at 2·10⁷ —
+    * a constant filter pays its bits in every task binary of both
+    * probe branches AND re-fingerprints the batch per branch; the
+    * local tier shuffles the slim (id, fp) projection once and reuses
+    * it), so auto dispatches local above [[LocalTierMinKeys]] with
     * parallelism-wide ranges (each filter still ≤ ~10⁸ keys), and the
-    * single tiny plan constant below it. The CASE ladder remains for
-    * explicitly forced `1 < ranges <= ladderMaxRanges`. Exactness is
-    * identical in all three tiers.
+    * single tiny plan constant below it. Exactness is identical in
+    * both tiers.
     *
     * @param snapshotFps existing corpus fingerprints, column `fp`
     *                    (string or bigint)
@@ -622,10 +615,8 @@ object Dedup {
     *                      snapshot is counted — a FULL extra pass over
     *                      it, logged loudly because callers at scale
     *                      should always pass the known cardinality
-    * @param ranges number of per-range filters; 0 = auto by size
-    * @param ladderMaxRanges largest range count still dispatched via
-    *                        the plan-constant CASE ladder; above it the
-    *                        executor-local tier takes over */
+    * @param ranges number of per-range filters: 0 = auto by size,
+    *               1 = the single filter, > 1 = the executor-local tier */
   def bloomDedupAgainstSnapshot(
       incoming: DataFrame,
       idCol: String,
@@ -633,8 +624,7 @@ object Dedup {
       snapshotFps: DataFrame,
       fpp: Double = 0.01,
       expectedItems: Long = -1L,
-      ranges: Int = 0,
-      ladderMaxRanges: Int = LadderMaxRanges): DataFrame = {
+      ranges: Int = 0): DataFrame = {
     import graft.expressions.BloomContains
     val n =
       if (expectedItems > 0L) expectedItems
@@ -645,9 +635,8 @@ object Dedup {
             "known cardinality at scale")
         math.max(snapshotFps.count(), 1L)
       }
-    val auto = ranges <= 0
     val r =
-      if (!auto) ranges
+      if (ranges > 0) ranges
       else if (n < LocalTierMinKeys) 1
       else {
         val byCapacity =
@@ -663,23 +652,7 @@ object Dedup {
         fped.withColumn("might_dup",
           BloomContains.contains(col("fp"),
             snapshotFps.stat.bloomFilter(col("fp"), n, fpp)))
-      else if (!auto && r <= ladderMaxRanges) {
-        val blooms = rangeBlooms(snapshotFps, r, math.max(n / r, 1L), fpp)
-        val rng = pmod(xxhash64(col("fp")), lit(r.toLong))
-        // CASE on the range key: one probe per row, each branch a
-        // bounded per-range plan constant. A range with no filter
-        // (empty snapshot slice) falls through to false — provably new.
-        val ladder = blooms match {
-          case Seq() => lit(false)
-          case (i0, bf0) +: rest =>
-            rest.foldLeft(
-                when(rng === i0, BloomContains.contains(col("fp"), bf0))) {
-                case (acc, (i, bf)) =>
-                  acc.when(rng === i, BloomContains.contains(col("fp"), bf))
-              }.otherwise(lit(false))
-        }
-        fped.withColumn("might_dup", ladder)
-      } else
+      else
         // The local tier pays a batch shuffle + a snapshot fold;
         // materialize its probe table ONCE into an eager checkpoint so
         // the two branch traversals below read blocks instead of
@@ -701,17 +674,9 @@ object Dedup {
     * (~120 MB of bitset at 1 % fpp). */
   private[graft] val MaxKeysPerBloom = 100L * 1000 * 1000
 
-  /** Largest per-range filter count the plan-constant CASE ladder may
-    * carry before [[bloomDedupAgainstSnapshot]] switches to the
-    * executor-local tier. 16 ranges × ~120 MB ≈ 2 GB of plan constants
-    * — already generous; past it the ladder's serialized plan, not the
-    * data, is the bottleneck. Reachable only via an explicit `ranges`
-    * — auto-selection goes straight to the local tier. */
-  private[graft] val LadderMaxRanges = 16
-
   /** Snapshot size above which auto-selection dispatches the
-    * executor-local tier. Measured (graft.BloomBench, local[16],
-    * 200k-row batch): the local tier already wins at 2·10⁵ snapshot
+    * executor-local tier. Measured (BENCH_NOTES "Round 8: snapshot-bloom
+    * tier handover", local[16], 200k-row batch): the local tier already wins at 2·10⁵ snapshot
     * keys (1.66 s vs 3.13 s single-bloom) and the gap only widens
     * (6.2× at 4·10⁶) — below ~10⁵ the filter is a few hundred KB and
     * the extra batch shuffle has nothing to amortize. */
@@ -755,16 +720,6 @@ object Dedup {
       }
   }
 
-  /** Driver-collected form of [[rangeBloomsRdd]] for the CASE-ladder
-    * tier: the driver holds the R bounded filters transiently while the
-    * probe expression is assembled. */
-  private[graft] def rangeBlooms(
-      snapshotFps: DataFrame,
-      ranges: Int,
-      perRangeItems: Long,
-      fpp: Double): Seq[(Int, org.apache.spark.util.sketch.BloomFilter)] =
-    rangeBloomsRdd(snapshotFps, ranges, perRangeItems, fpp).collect().toSeq
-
   /** Executor-local range-bloom probe: annotates `fped` (columns
     * `(id, fp)`) with a `might_dup` boolean WITHOUT any filter ever
     * reaching the driver, the plan, or a foreign executor. Both sides
@@ -773,8 +728,8 @@ object Dedup {
     * [[rangeBloomsRdd]] builds with), then `zipPartitions` hands each
     * task ITS range's filter and ITS range's batch rows and nothing
     * else. At 10¹¹ snapshot keys (~1000 ranges, ~12 GB of filters
-    * total) every task still holds ≤ 120 MB — the property the
-    * plan-constant ladder cannot offer.
+    * total) every task still holds ≤ 120 MB — the property a
+    * plan-constant filter cannot offer.
     *
     * LAZY, and deliberately does NOT persist the filter RDD:
     * [[bloomDedupAgainstSnapshot]] materializes this probe's output
@@ -786,8 +741,8 @@ object Dedup {
     * the returned frame more than once must materialize it themselves.
     *
     * Null fingerprints (null input text) route to partition 0 with a
-    * `might_dup = false` verdict — provably new, matching the ladder's
-    * CASE-falls-through-to-false semantics. */
+    * `might_dup = false` verdict — provably new, so null-text rows are
+    * kept. */
   private[graft] def probeRangeLocal(
       fped: DataFrame,
       snapshotFps: DataFrame,
@@ -1371,18 +1326,8 @@ object Dedup {
     val enc = org.apache.spark.sql.Encoders.row(pruned.schema)
     pruned.mapPartitions { it =>
       val parent = new java.util.HashMap[Any, Any]()
-      def find(x: Any): Any = {
-        if (!parent.containsKey(x)) { parent.put(x, x); x }
-        else {
-          var r = x
-          while (parent.get(r) != r) r = parent.get(r)
-          var c = x
-          while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-          r
-        }
-      }
       it.filter { row =>
-        val ra = find(row.get(0)); val rb = find(row.get(1))
+        val ra = find(parent, row.get(0)); val rb = find(parent, row.get(1))
         if (ra == rb) false
         else { parent.put(ra, rb); true }
       }
@@ -1399,21 +1344,13 @@ object Dedup {
       sideCol: Option[String] = None): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"jaccardJoin: threshold must be in (0, 1], got $threshold")
-    import org.apache.spark.storage.StorageLevel
     if (!persistIntermediate)
       shape(jaccardJoinFrom(docs, threshold, identity, tier, bitmapVocabLimit,
         sideCol))
-    else {
-      val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      def track(df: DataFrame): DataFrame = {
-        tracked += df
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-      }
-      val out = graft.util.Blocks.checkpoint(
+    else graft.util.Blocks.withTracked { track =>
+      graft.util.Blocks.checkpoint(
         shape(jaccardJoinFrom(docs, threshold, track, tier, bitmapVocabLimit,
-          sideCol)))
-      tracked.foreach(_.unpersist(blocking = false))
-      out.df
+          sideCol))).df
     }
   }
 
@@ -1769,12 +1706,6 @@ object Dedup {
     * @return (`id`, `comp`) — component = min reachable id, one row per
     *         node that appears in `pairs`
     */
-  /** Diagnostics of the most recent [[connectedComponents]] call in
-    * this JVM: (tier, fixpoint rounds, directed contracted edges). The
-    * driver tier reports 0 rounds. Written for the scale harness
-    * ([[graft.CcBench]]); not part of the query API. */
-  @volatile private[graft] var lastCcDiag: (String, Int, Long) = ("none", 0, 0L)
-
   def connectedComponents(
       pairs: DataFrame,
       maxIter: Int = 20,
@@ -1797,23 +1728,26 @@ object Dedup {
     // untouched. The persist bounds the cost of the count+collect
     // double consumption; callers pass already-checkpointed pair lists
     // in every query path, making both actions metadata-scale scans.
+    // A pair with a null endpoint joins nothing in the distributed tiers
+    // and would make null a union-find key in the driver tiers, so every
+    // tier drops it (a narrow filter in the persist's own stage).
     val pairsP = pairs.select(col("id_a"), col("id_b"))
+      .where(col("id_a").isNotNull && col("id_b").isNotNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // Driver-tier eligibility comes from the id type (as PageRank's
+    // does), never from a sampled row.
+    val idType = pairsP.schema("id_a").dataType
+    val driverTier =
+      idType == pairsP.schema("id_b").dataType && driverOrdered(idType)
+    val labelSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id", idType),
+      org.apache.spark.sql.types.StructField("comp", idType)))
     val nPairs = pairsP.count()
-    if (nPairs <= driverTierMaxEdges && nPairs > 0) {
-      val rows = pairsP.collect()
-      if (rows(0).get(0).isInstanceOf[Comparable[_]]
-          && rows(0).get(1).isInstanceOf[Comparable[_]]) {
-        val labels = unionFindLabels(rows)
-        val idType = pairsP.schema("id_a").dataType
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id", idType),
-          org.apache.spark.sql.types.StructField("comp", idType)))
-        val out = pairsP.sparkSession.createDataFrame(labels, schema)
-        pairsP.unpersist(blocking = false)
-        lastCcDiag = ("fast", 0, nPairs)
-        return out
-      }
+    if (driverTier && nPairs <= driverTierMaxEdges && nPairs > 0) {
+      val out = pairsP.sparkSession.createDataFrame(
+        unionFindLabels(pairsP.collect()), labelSchema)
+      pairsP.unpersist(blocking = false)
+      return out
     }
     // Both edge directions from ONE scan of `pairs` (an explode, not a
     // self-union — union would evaluate the upstream pair pipeline
@@ -1876,8 +1810,8 @@ object Dedup {
     // contracted graph can still exceed any driver bound.
     val nContracted = contracted.count() // directed rows = 2× edges
     // The distributed fixpoint loop — labels = min reachable id over the
-    // contracted graph. Scale tier, and fallback if the driver tier
-    // cannot compare this id type.
+    // contracted graph. Scale tier, and the only tier for id types the
+    // driver cannot compare.
     def iterativeLabels(): (DataFrame, Option[Blocks.Checkpointed]) = {
       // eagerly checkpointed for the same stats reason as `seed`: the
       // loop's per-round joins must see the label table's true (tiny)
@@ -1926,31 +1860,17 @@ object Dedup {
             "fixpoint; returned component labels may be UNCONVERGED. " +
             "Raise maxIter (rounds needed ~ log2 of the largest component " +
             "diameter after star contraction).")
-      lastCcDiag = ("loop", iter, nContracted)
       (labels, Some(labelsCp))
     }
-    // Driver union-find over the bounded contracted edge list. Exact
-    // same labels as the fixpoint (component = min id, Comparable order
-    // matches Spark's ordering for all atomic external types: boxed
-    // numerics, String, BigDecimal, java.sql date/time). Returns None
-    // for a non-Comparable id type (e.g. binary) → caller falls back.
-    def driverLabels(): Option[(DataFrame, Option[Blocks.Checkpointed])] = {
-      val undirected = contracted.where(col("u") < col("v")).collect()
-      if (undirected.nonEmpty && (!undirected(0).get(0).isInstanceOf[Comparable[_]]
-          || !undirected(0).get(1).isInstanceOf[Comparable[_]])) return None
-      val idType = contracted.schema("u").dataType
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", idType),
-        org.apache.spark.sql.types.StructField("comp", idType)))
-      // LocalRelation: exact size known → the final mapping join
-      // broadcasts it, same plan shape as the loop tier's checkpoint
-      lastCcDiag = ("driver", 0, nContracted)
-      Some((contracted.sparkSession.createDataFrame(
-        unionFindLabels(undirected), schema), None))
-    }
+    // Driver union-find over the bounded contracted edge list: exact
+    // same labels as the fixpoint. The result is a LocalRelation: exact
+    // size known → the final mapping join broadcasts it, same plan
+    // shape as the loop tier's checkpoint.
     val (labels, labelsCpOpt) =
-      (if (nContracted <= 2L * driverTierMaxEdges) driverLabels() else None)
-        .getOrElse(iterativeLabels())
+      if (driverTier && nContracted <= 2L * driverTierMaxEdges)
+        (contracted.sparkSession.createDataFrame(unionFindLabels(
+          contracted.where(col("u") < col("v")).collect()), labelSchema), None)
+      else iterativeLabels()
     // map every original node through its star root's final component;
     // materialize the RESULT eagerly so every intermediate block set —
     // seeds, final-round labels, edge tables — can be freed before
@@ -1966,27 +1886,43 @@ object Dedup {
     outCp.df
   }
 
+  /** Id types the driver CC tiers accept: their external values are
+    * `Comparable` in the order Spark sorts them (boxed numerics and
+    * BigDecimal, String, Boolean, java.sql/java.time dates and
+    * timestamps). Any other id type takes the distributed loop. */
+  private def driverOrdered(t: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    t match {
+      case _: NumericType | BooleanType | DateType | TimestampType |
+          TimestampNTZType => true
+      case other => other == StringType
+    }
+  }
+
+  /** Union-find root of `x` with path compression; an unseen key
+    * becomes its own root. Shared by [[spanningForestWithin]] and
+    * [[unionFindLabels]]. */
+  private def find(parent: java.util.HashMap[Any, Any], x: Any): Any =
+    if (!parent.containsKey(x)) { parent.put(x, x); x }
+    else {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+
   /** Driver union-find over a collected (u, v) pair array: one
     * (id, comp = min reachable id) row per node that appears. The exact
     * label contract of every [[connectedComponents]] tier (Comparable
-    * order matches Spark's ordering for all atomic external types);
+    * order matches Spark's ordering for the [[driverOrdered]] types);
     * shared by the fast tier (raw pairs) and the driver tier
     * (contracted edges). */
   private def unionFindLabels(
       rows: Array[org.apache.spark.sql.Row]): java.util.List[org.apache.spark.sql.Row] = {
     val parent = new java.util.HashMap[Any, Any]()
-    def find(x: Any): Any = {
-      if (!parent.containsKey(x)) { parent.put(x, x); x }
-      else {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-    }
     rows.foreach { row =>
-      val ra = find(row.get(0)); val rb = find(row.get(1))
+      val ra = find(parent, row.get(0)); val rb = find(parent, row.get(1))
       if (ra != rb) parent.put(ra, rb)
     }
     def lt(a: Any, b: Any): Boolean =
@@ -1994,12 +1930,12 @@ object Dedup {
     val minOf = new java.util.HashMap[Any, Any]()
     val nodes: Array[AnyRef] = parent.keySet().toArray
     nodes.foreach { n =>
-      val r = find(n)
+      val r = find(parent, n)
       val cur = minOf.get(r)
       if (cur == null || lt(n, cur)) minOf.put(r, n)
     }
     java.util.Arrays.asList(nodes.map(n =>
-      org.apache.spark.sql.Row(n, minOf.get(find(n)))): _*)
+      org.apache.spark.sql.Row(n, minOf.get(find(parent, n)))): _*)
   }
 
   // ---------------------------------------------------------------------
@@ -2128,22 +2064,17 @@ object Dedup {
       threshold: Double = 0.5,
       maxBucketSize: Int = 100000,
       persistIntermediate: Boolean = true): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val shingled = shingleTable(df, idCol, textCol, shingleK)
     if (!persistIntermediate)
       minHashDedupFromShingles(shingled, numPerm, bands, threshold,
         maxBucketSize)
     else {
       val shCp = graft.util.Blocks.checkpoint(shingled)
-      val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      def track(d: DataFrame): DataFrame = {
-        tracked += d
-        d.persist(StorageLevel.MEMORY_AND_DISK)
+      val out = graft.util.Blocks.withTracked { track =>
+        graft.util.Blocks.checkpoint(
+          minHashDedupFromShingles(shCp.df, numPerm, bands, threshold,
+            maxBucketSize, track))
       }
-      val out = graft.util.Blocks.checkpoint(
-        minHashDedupFromShingles(shCp.df, numPerm, bands, threshold,
-          maxBucketSize, track))
-      tracked.foreach(_.unpersist(blocking = false))
       shCp.release()
       out.df
     }
@@ -2228,20 +2159,15 @@ object Dedup {
       maxHamming: Int = 3,
       maxBucketSize: Int = 100000,
       persistIntermediate: Boolean = true): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val sigs = simHashSignatures(df, idCol, textCol)
     if (!persistIntermediate)
       simHashDedupFromSigs(sigs, maxHamming, maxBucketSize)
     else {
       val sigCp = graft.util.Blocks.checkpoint(sigs)
-      val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      def track(d: DataFrame): DataFrame = {
-        tracked += d
-        d.persist(StorageLevel.MEMORY_AND_DISK)
+      val out = graft.util.Blocks.withTracked { track =>
+        graft.util.Blocks.checkpoint(
+          simHashDedupFromSigs(sigCp.df, maxHamming, maxBucketSize, track))
       }
-      val out = graft.util.Blocks.checkpoint(
-        simHashDedupFromSigs(sigCp.df, maxHamming, maxBucketSize, track))
-      tracked.foreach(_.unpersist(blocking = false))
       sigCp.release()
       out.df
     }

@@ -26,8 +26,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * reference object deserialized once per executor — each instance
   * should stay bounded (~10⁸ keys ≈ 120 MB at 1% fpp); past that,
   * [[graft.dedup.Dedup.bloomDedupAgainstSnapshot]] builds PER-RANGE
-  * filters and dispatches on the range key, so every BloomContains in
-  * the plan stays metadata-scale.
+  * filters and probes them executor-locally, with no BloomContains in
+  * the plan at all.
   */
 case class BloomContains(child: Expression, filterBytes: Array[Byte])
     extends UnaryExpression {

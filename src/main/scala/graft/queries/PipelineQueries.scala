@@ -257,17 +257,13 @@ object PipelineQueries {
       .unionByName(plantedDocs(s))
     val shCp = Blocks.checkpoint(
       Dedup.shingleTable(corpus, "doc_id", "text", shingleK = 3))
-    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def track(d: DataFrame): DataFrame = {
-      tracked += d
-      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (outCp, truthCp) = Blocks.withTracked { track =>
+      (Blocks.checkpoint(
+        Dedup.minHashDedupFromShingles(shCp.df, numPerm = 32, bands = 8,
+          threshold = 0.4, maybePersist = track)),
+        Blocks.checkpoint(
+          jaccardPairTruthFromShingles(shCp.df, threshold = 0.4)))
     }
-    val outCp = Blocks.checkpoint(
-      Dedup.minHashDedupFromShingles(shCp.df, numPerm = 32, bands = 8,
-        threshold = 0.4, maybePersist = track))
-    val truthCp = Blocks.checkpoint(
-      jaccardPairTruthFromShingles(shCp.df, threshold = 0.4))
-    tracked.foreach(_.unpersist(blocking = false))
     shCp.release()
     plantedAndRecallFrom(outCp.df, plantedPairCond, truthCp.df,
       Seq("id_a", "id_b"), floor = 0.7)
@@ -285,17 +281,13 @@ object PipelineQueries {
       .unionByName(plantedDocs(s))
     val sigCp = Blocks.checkpoint(
       Dedup.simHashSignatures(corpus, "doc_id", "text"))
-    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def track(d: DataFrame): DataFrame = {
-      tracked += d
-      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (outCp, truthCp) = Blocks.withTracked { track =>
+      (Blocks.checkpoint(
+        Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
+          maybePersist = track)),
+        Blocks.checkpoint(
+          simhashPairTruthFromSigs(sigCp.df, maxHamming = 3)))
     }
-    val outCp = Blocks.checkpoint(
-      Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
-        maybePersist = track))
-    val truthCp = Blocks.checkpoint(
-      simhashPairTruthFromSigs(sigCp.df, maxHamming = 3))
-    tracked.foreach(_.unpersist(blocking = false))
     sigCp.release()
     // pigeonhole blocking is lossless at hamming <= 3 -> exactness floor
     plantedAndRecallFrom(outCp.df, plantedPairCond, truthCp.df,
@@ -2713,8 +2705,7 @@ object PipelineQueries {
     * dispatches the EXECUTOR-LOCAL range tier (round 8 — the measured
     * fastest at every size and the only one whose filter volume scales
     * past a single plan/driver budget), and the gate proves THAT tier
-    * exact, not just the single-filter one. The CASE-ladder tier stays
-    * covered by DedupSpec's forced-ranges tests. */
+    * exact, not just the single-filter one. */
   def q83BloomDedup(s: SparkSession, dir: String): DataFrame = {
     val docs = docsSpread(s, dir)
     val snapHash =
@@ -4213,23 +4204,6 @@ object PipelineQueries {
       // quadratic: 50 s at 10x vs 4.8 s aligned)
       DHash.dhash(PngImage.pngImage(lit(72), lit(64), col("seeds")))
         .as("sig")))
-    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def track(d: DataFrame): DataFrame = {
-      tracked += d
-      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    // block on the frame index: only same-index frames can vote, and
-    // at 4M+ frames the unblocked 16-bit band space saturates (see
-    // simHashDedupFromSigs' blockCol note)
-    val framePairs = Dedup.simHashDedupFromSigs(
-      sigCp.df.select(col("id"), col("sig"), col("f")), maxHamming = 3,
-      maybePersist = track, blockCol = Some("f"))
-    val votes = framePairs
-      .select((expr("id_a div 16") - 2L).as("id_a"),
-        (expr("id_b div 16") - 2L).as("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).cast("long").as("n_frames"))
-      .where(col("n_frames") >= 6L)
     // family-recall truth: probe-video frames × same-index corpus
     // frames at EXACT hamming ≤ 3, voted to video pairs at ≥ 6/8.
     // The probe join is quarter-banded — hamming ≤ 3 across 64 bits
@@ -4267,9 +4241,21 @@ object PipelineQueries {
       .select((col("ea") - 2L).as("id_a"), (col("eb") - 2L).as("id_b"))
     // eager checkpoints BEFORE the upstream releases — a lazy wrapper
     // would try to recompute through the freed sig blocks
-    val votesCp = Blocks.checkpoint(votes)
-    val truthCp = Blocks.checkpoint(truth)
-    tracked.foreach(_.unpersist(blocking = false))
+    val (votesCp, truthCp) = Blocks.withTracked { track =>
+      // block on the frame index: only same-index frames can vote, and
+      // at 4M+ frames the unblocked 16-bit band space saturates (see
+      // simHashDedupFromSigs' blockCol note)
+      val framePairs = Dedup.simHashDedupFromSigs(
+        sigCp.df.select(col("id"), col("sig"), col("f")), maxHamming = 3,
+        maybePersist = track, blockCol = Some("f"))
+      val votes = framePairs
+        .select((expr("id_a div 16") - 2L).as("id_a"),
+          (expr("id_b div 16") - 2L).as("id_b"))
+        .groupBy(col("id_a"), col("id_b"))
+        .agg(count(lit(1)).cast("long").as("n_frames"))
+        .where(col("n_frames") >= 6L)
+      (Blocks.checkpoint(votes), Blocks.checkpoint(truth))
+    }
     sigCp.release()
     // planted gate pins the DOCUMENTED claim: identical payloads hash
     // identically per frame, so the pair must arrive with n_frames = 8
@@ -4305,17 +4291,13 @@ object PipelineQueries {
     val sigCp = Blocks.checkpoint(corpus.select(col("doc_id").as("id"),
       AudioFp.audioFp(WavTone.wavTone(lit(16000), lit(6400), col("seeds")))
         .as("sig")))
-    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def track(d: DataFrame): DataFrame = {
-      tracked += d
-      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (outCp, truthCp) = Blocks.withTracked { track =>
+      (Blocks.checkpoint(
+        Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
+          maybePersist = track)),
+        Blocks.checkpoint(
+          simhashPairTruthFromSigs(sigCp.df, maxHamming = 3)))
     }
-    val outCp = Blocks.checkpoint(
-      Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
-        maybePersist = track))
-    val truthCp = Blocks.checkpoint(
-      simhashPairTruthFromSigs(sigCp.df, maxHamming = 3))
-    tracked.foreach(_.unpersist(blocking = false))
     sigCp.release()
     plantedAndRecallFrom(outCp.df, plantedPairCond, truthCp.df,
       Seq("id_a", "id_b"), floor = 1.0)
@@ -4428,17 +4410,13 @@ object PipelineQueries {
     val sigCp = Blocks.checkpoint(corpus.select(col("doc_id").as("id"),
       DHash.dhash(PngImage.pngImage(lit(72), lit(64), col("seeds")))
         .as("sig")))
-    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def track(d: DataFrame): DataFrame = {
-      tracked += d
-      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (outCp, truthCp) = Blocks.withTracked { track =>
+      (Blocks.checkpoint(
+        Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
+          maybePersist = track)),
+        Blocks.checkpoint(
+          simhashPairTruthFromSigs(sigCp.df, maxHamming = 3)))
     }
-    val outCp = Blocks.checkpoint(
-      Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
-        maybePersist = track))
-    val truthCp = Blocks.checkpoint(
-      simhashPairTruthFromSigs(sigCp.df, maxHamming = 3))
-    tracked.foreach(_.unpersist(blocking = false))
     sigCp.release()
     plantedAndRecallFrom(outCp.df, plantedPairCond, truthCp.df,
       Seq("id_a", "id_b"), floor = 1.0)
@@ -4475,17 +4453,13 @@ object PipelineQueries {
       .otherwise(GifImage.gifImage(lit(72), lit(64), col("seeds")))
     val sigCp = Blocks.checkpoint(corpus.select(col("doc_id").as("id"),
       DHash.dhash(payload).as("sig")))
-    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def track(d: DataFrame): DataFrame = {
-      tracked += d
-      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (outCp, truthCp) = Blocks.withTracked { track =>
+      (Blocks.checkpoint(
+        Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
+          maybePersist = track)),
+        Blocks.checkpoint(
+          simhashPairTruthFromSigs(sigCp.df, maxHamming = 3)))
     }
-    val outCp = Blocks.checkpoint(
-      Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
-        maybePersist = track))
-    val truthCp = Blocks.checkpoint(
-      simhashPairTruthFromSigs(sigCp.df, maxHamming = 3))
-    tracked.foreach(_.unpersist(blocking = false))
     sigCp.release()
     plantedAndRecallFrom(outCp.df, plantedPairCond, truthCp.df,
       Seq("id_a", "id_b"), floor = 1.0)
@@ -4530,17 +4504,13 @@ object PipelineQueries {
       .otherwise(JpegImage.jpegImage(lit(72), lit(64), col("seeds")))
     val sigCp = Blocks.checkpoint(corpus.select(col("doc_id").as("id"),
       DHash.dhash(payload).as("sig")))
-    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def track(d: DataFrame): DataFrame = {
-      tracked += d
-      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (outCp, truthCp) = Blocks.withTracked { track =>
+      (Blocks.checkpoint(
+        Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
+          maybePersist = track)),
+        Blocks.checkpoint(
+          simhashPairTruthFromSigs(sigCp.df, maxHamming = 3)))
     }
-    val outCp = Blocks.checkpoint(
-      Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
-        maybePersist = track))
-    val truthCp = Blocks.checkpoint(
-      simhashPairTruthFromSigs(sigCp.df, maxHamming = 3))
-    tracked.foreach(_.unpersist(blocking = false))
     sigCp.release()
     plantedAndRecallFrom(outCp.df, plantedPairCond, truthCp.df,
       Seq("id_a", "id_b"), floor = 1.0)
@@ -4573,16 +4543,12 @@ object PipelineQueries {
       PngImage.pngImage(lit(72), lit(64), col("seeds")).as("payload")))
     val sigCp = Blocks.checkpoint(imgCp.df.select(col("id"),
       DHash.dhash(col("payload")).as("sig")))
-    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def track(d: DataFrame): DataFrame = {
-      tracked += d
-      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the CC result is materialized before the tracked pairs are freed
+    val comp = Blocks.withTracked { track =>
+      Dedup.connectedComponents(
+        Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
+          maybePersist = track).select(col("id_a"), col("id_b")))
     }
-    val pairs = Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
-      maybePersist = track)
-    val comp = Dedup.connectedComponents(
-      pairs.select(col("id_a"), col("id_b")))
-    tracked.foreach(_.unpersist(blocking = false))
     sigCp.release()
     val planted = comp.agg(
       (count(when(col("id") === PlantA || col("id") === PlantB, 1)) === 2 &&

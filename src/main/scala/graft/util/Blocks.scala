@@ -78,6 +78,18 @@ object Blocks {
   def release(df: DataFrame): Unit =
     handleOf(df).foreach(_.unpersist(blocking = false))
 
+  /** Runs `body` with a `track` function that persists a frame
+    * (`MEMORY_AND_DISK`, so huge intermediates spill instead of OOM)
+    * and remembers it; every tracked frame is unpersisted once `body`
+    * returns or throws. `body` must materialize whatever reads the
+    * tracked frames (an eager [[checkpoint]], a finished operator)
+    * before it returns. */
+  def withTracked[T](body: (DataFrame => DataFrame) => T): T = {
+    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df => tracked += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
+    finally tracked.foreach(_.unpersist(blocking = false))
+  }
+
   /** Unpersist EVERY RDD-level block set registered with the context —
     * Dataset-cache entries (`df.persist`) live in the cache manager and
     * have their own `clearCache()`, but local-checkpoint blocks are

@@ -248,43 +248,13 @@ class DedupSpec extends SparkSpec {
     assert(bloomed.count() === 50L) // ids 300-349 are genuinely new texts
   }
 
-  test("partitioned bloom tier (ranges=4) is value-identical and plans per-range filters") {
-    // parquet-backed input: over a LocalRelation Catalyst pushes the
-    // probe filter below the scan and constant-folds it away at plan
-    // time — the real operator runs over file scans, where the
-    // per-range probes must stay in the physical plan
-    val dir = java.nio.file.Files.createTempDirectory("bloomtier").toString
-    (0L until 400L)
-      .map(i => (i, s"document body number ${i % 300}"))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(dir)
-    val corpus = spark.read.parquet(dir)
-    val snapshot = corpus.where(col("doc_id") < 250)
-      .select(graft.text.TextAnalysis.fingerprint(col("text")).as("fp"))
-      .distinct()
-    val incoming = corpus.where(col("doc_id") >= 250)
-    val plain = Dedup.dedupAgainstSnapshot(incoming, "doc_id", "text", snapshot)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1).toSeq
-    val tiered = Dedup.bloomDedupAgainstSnapshot(
-      incoming, "doc_id", "text", snapshot,
-      expectedItems = 1000L, ranges = 4)
-    assert(tiered.collect().map(r =>
-      (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq === plain)
-    // the probe must dispatch to one BOUNDED filter per range — 4
-    // bloom_contains branches in each of the two scan filters
-    val plan = tiered.queryExecution.executedPlan.toString
-    val probes = "bloom_contains".r.findAllIn(plan).length
-    assert(probes >= 4, s"expected >= 4 per-range bloom probes, got $probes:\n$plan")
-  }
-
   test("rangeBlooms long path: every key lands in its own range's filter") {
     // the fp contract allows string OR long keys; the per-range build
     // must put longs natively (not via toString) for BloomContains'
     // mightContainLong probe to find them
     val fps = (0L until 100L).map(_ * 7919L)
     val snapshot = fps.toDF("fp")
-    val blooms = Dedup.rangeBlooms(snapshot, 4, 50L, 0.01).toMap
+    val blooms = Dedup.rangeBloomsRdd(snapshot, 4, 50L, 0.01).collect().toMap
     val rngOf = snapshot.select(col("fp"),
         pmod(xxhash64(col("fp")), lit(4L)).cast("int").as("rng"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -302,9 +272,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("executor-local bloom tier is value-identical and ships no plan-constant filters") {
-    // ranges=4 with ladderMaxRanges=1 forces the zipPartitions tier —
-    // the 10^11-key path where no task, plan constant, or driver array
-    // ever holds more than its own range's filter
+    // ranges=4 forces the zipPartitions tier — the 10^11-key path where
+    // no task, plan constant, or driver array ever holds more than its
+    // own range's filter
     val dir = java.nio.file.Files.createTempDirectory("bloomlocal").toString
     (0L until 400L)
       .map(i => (i, s"document body number ${i % 300}"))
@@ -320,10 +290,10 @@ class DedupSpec extends SparkSpec {
       .sortBy(_._1).toSeq
     val local = Dedup.bloomDedupAgainstSnapshot(
       incoming, "doc_id", "text", snapshot,
-      expectedItems = 1000L, ranges = 4, ladderMaxRanges = 1)
+      expectedItems = 1000L, ranges = 4)
     assert(local.collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq === plain)
-    // the defining property vs the CASE ladder: NO filter is a plan
+    // the defining property vs the single filter: NO filter is a plan
     // constant — probing happens executor-side inside zipPartitions
     // (the one-filter-per-task guarantee is require()d in the task)
     val plan = local.queryExecution.executedPlan.toString
@@ -334,12 +304,12 @@ class DedupSpec extends SparkSpec {
   test("auto tier selection: big snapshot hint goes executor-local, small stays single") {
     // same tiny data either way — only the expectedItems HINT differs;
     // auto must dispatch the measured-fastest tier for the declared
-    // scale (BloomBench: local wins from 2e5 keys up)
+    // scale (BENCH_NOTES round 8: local wins from 2e5 keys up)
     val snapshot = Seq("a doc", "b doc")
       .toDF("text")
       .select(graft.text.TextAnalysis.fingerprint(col("text")).as("fp"))
     // parquet-backed: over a LocalRelation Catalyst constant-folds the
-    // plan-constant probe away entirely (same caveat as the ladder test)
+    // plan-constant probe away entirely
     val dir = java.nio.file.Files.createTempDirectory("bloomauto").toString
     Seq((1L, "a doc"), (2L, "c doc")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(dir)
@@ -360,15 +330,15 @@ class DedupSpec extends SparkSpec {
   }
 
   test("executor-local bloom tier: null-text rows route to range 0 as provably new") {
-    // fingerprint(null text) = null; the ladder's CASE falls through to
-    // false and the local tier must agree — null-fp rows are kept
+    // fingerprint(null text) = null; the local tier routes it to range 0
+    // with might_dup = false — null-fp rows are kept
     val incoming = Seq(
       (1L, "fresh doc"), (2L, null.asInstanceOf[String]),
       (3L, null.asInstanceOf[String])).toDF("doc_id", "text")
     val snapshot = Seq("other doc").toDF("text")
       .select(graft.text.TextAnalysis.fingerprint(col("text")).as("fp"))
     val out = Dedup.bloomDedupAgainstSnapshot(incoming, "doc_id", "text",
-      snapshot, expectedItems = 10L, ranges = 4, ladderMaxRanges = 1)
+      snapshot, expectedItems = 10L, ranges = 4)
     assert(out.count() === 2) // the fresh doc + the null-fp group
     val nullGrp = out.where(col("fp").isNull).collect()
     assert(nullGrp.length === 1)
@@ -509,6 +479,23 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(fast === loop)
     assert(fast(9L) === 7L && fast(5L) === 5L)
+  }
+
+  test("connectedComponents tiers agree on null ids and drop null pairs") {
+    // a null endpoint is no node: neither the driver tier's union-find
+    // nor the loop tier may label it, so both return the same labels
+    val pairs = Seq[(Option[Long], Option[Long])](
+        (Some(1L), Some(2L)), (Some(2L), Some(3L)), (None, Some(3L)),
+        (Some(5L), Some(6L)))
+      .toDF("id_a", "id_b")
+    val want = Map[Any, Any](1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L)
+    for (tierMax <- Seq(200000, 0)) { // fast driver tier, then loop tier
+      val rows = Dedup.connectedComponents(pairs, driverTierMaxEdges = tierMax)
+        .collect()
+      assert(rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
+        s"tier $tierMax: ${rows.mkString(", ")}")
+      assert(rows.map(r => r.get(0) -> r.get(1)).toMap === want, s"tier $tierMax")
+    }
   }
 
   test("connectedComponents converges on a long chain within maxIter") {
