@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * gateable artifacts like RECALL_SELF.json, not prose.
   *
   * The `collapse`/`pipeline` sections additionally gate the round-13
-  * linearization of the nearDupCollapse candidate stream: q54 and
-  * q130 are timed at BOTH the decade dir (10×) and `sfDir` (100×),
+  * linearization of the nearDupCollapseFromShingles candidate stream:
+  * q54 and q130 are timed at BOTH the decade dir (10×) and `sfDir` (100×),
   * Bench-style full-result consumption, and the per-decade wall ratio
   * is recorded with a `sub_decade_ok` flag (ratio < 10 ⇔ the stream
   * stayed ≤ linear in the corpus; the pre-fix quadratic form measured
@@ -145,8 +145,9 @@ object ScalePathBench {
         .select(col("doc_id"), col("text"))
       val nDocs = docs.count()
       timed("q132_scale_path_cluster_first", () => {
-        val labels = graft.dedup.Dedup.nearDupCollapse(
-          docs, "doc_id", "text", threshold = 0.5)
+        val labels = graft.dedup.Dedup.nearDupCollapseFromShingles(
+          graft.dedup.Dedup.shingleTable(docs, "doc_id", "text", 3),
+          threshold = 0.5)
         graft.curate.Curation.leakageSafeSplit(
             docs.select(col("doc_id")), "doc_id",
             labels.select(col("id"), col("comp")),

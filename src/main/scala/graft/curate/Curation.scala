@@ -409,8 +409,8 @@ object Curation {
     * The cluster frame is caller-supplied, which IS the scale story:
     * at gate scale feed the pair-exact q23→CC labels (oracle-checkable
     * end to end); at corpus scale feed
-    * [[graft.dedup.Dedup.nearDupCollapse]]'s cluster-first labels —
-    * the split logic is label-source-agnostic.
+    * [[graft.dedup.Dedup.nearDupCollapseFromShingles]]'s cluster-first
+    * labels — the split logic is label-source-agnostic.
     *
     * @param clusters `(id, comp)` cluster assignment; ids must share
     *                 the type of `df`'s id column */

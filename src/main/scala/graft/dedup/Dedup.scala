@@ -138,23 +138,17 @@ object Dedup {
       idCol: String,
       textCol: String,
       k: Int,
-      maxDocsPerWindow: Long = 50L,
-      persistIntermediate: Boolean = true): DataFrame = {
+      maxDocsPerWindow: Long = 50L): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     val wpos = docs.select(col(idCol).as("id"),
       posexplode(graft.expressions.RollingWindows.rollingWindows(
         TextAnalysis.canonical(col(textCol)), k)).as(Seq("pos", "wh")))
-    val wposCp =
-      if (persistIntermediate) Some(graft.util.Blocks.checkpoint(wpos)) else None
-    val wposDf = wposCp.map(_.df).getOrElse(wpos)
-    val eligible = eligibleSharedHashes(wposDf, maxDocsPerWindow)
-    val w2j = wposDf.join(eligible, "wh")
-    val w2 =
-      if (persistIntermediate) Some(graft.util.Blocks.checkpoint(w2j)) else None
-    val w2Df = w2.map(_.df).getOrElse(w2j)
-    wposCp.foreach(_.release())
-    val m = w2Df.as("a")
-      .join(w2Df.as("b"),
+    val wposCp = graft.util.Blocks.checkpoint(wpos)
+    val eligible = eligibleSharedHashes(wposCp.df, maxDocsPerWindow)
+    val w2 = graft.util.Blocks.checkpoint(wposCp.df.join(eligible, "wh"))
+    wposCp.release()
+    val m = w2.df.as("a")
+      .join(w2.df.as("b"),
         col("a.wh") === col("b.wh") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.pos").as("pos_a"),
@@ -170,11 +164,9 @@ object Dedup {
       .agg((lit(k - 1) + max(col("_run"))).cast("long").as("span_len"),
         count(lit(1)).cast("long").as("n_runs"),
         sum(col("_run")).cast("long").as("n_anchors"))
-    if (persistIntermediate) {
-      val out = graft.util.Blocks.checkpoint(result)
-      w2.foreach(_.release())
-      out.df
-    } else result
+    val out = graft.util.Blocks.checkpoint(result)
+    w2.release()
+    out.df
   }
 
   /** Winnowed substring-duplicate groups — [[substringDupGroups]] at
@@ -269,8 +261,7 @@ object Dedup {
       textCol: String,
       k: Int,
       w: Int,
-      maxDocsPerAnchor: Long = 50L,
-      persistIntermediate: Boolean = true): DataFrame = {
+      maxDocsPerAnchor: Long = 50L): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(w >= 2, s"w must be >= 2, got $w")
     val wpos = docs.select(col(idCol).as("id"),
@@ -288,17 +279,12 @@ object Dedup {
       .select(col("id"), expr("_key div 1048576").as("wh"),
         (lit(1048575L) - expr("_key % 1048576")).as("apos"))
       .distinct()
-    val selCp =
-      if (persistIntermediate) Some(graft.util.Blocks.checkpoint(sel)) else None
-    val selDf = selCp.map(_.df).getOrElse(sel)
-    val eligible = eligibleSharedHashes(selDf, maxDocsPerAnchor)
-    val a2j = selDf.join(eligible, "wh")
-    val a2 =
-      if (persistIntermediate) Some(graft.util.Blocks.checkpoint(a2j)) else None
-    val a2Df = a2.map(_.df).getOrElse(a2j)
-    selCp.foreach(_.release())
-    val m = a2Df.as("a")
-      .join(a2Df.as("b"),
+    val selCp = graft.util.Blocks.checkpoint(sel)
+    val eligible = eligibleSharedHashes(selCp.df, maxDocsPerAnchor)
+    val a2 = graft.util.Blocks.checkpoint(selCp.df.join(eligible, "wh"))
+    selCp.release()
+    val m = a2.df.as("a")
+      .join(a2.df.as("b"),
         col("a.wh") === col("b.wh") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.apos").as("pos_a"),
@@ -319,11 +305,9 @@ object Dedup {
       .agg(max(col("_lb")).cast("long").as("span_lb"),
         count(lit(1)).cast("long").as("n_runs"),
         sum(col("_n")).cast("long").as("n_anchors"))
-    if (persistIntermediate) {
-      val out = graft.util.Blocks.checkpoint(result)
-      a2.foreach(_.release())
-      out.df
-    } else result
+    val out = graft.util.Blocks.checkpoint(result)
+    a2.release()
+    out.df
   }
 
   /** Per-document duplicated-span COVERAGE — the Lee-et-al "how much
@@ -353,24 +337,21 @@ object Dedup {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      k: Int,
-      persistIntermediate: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     val base = docs.select(col(idCol).as("id"),
       TextAnalysis.canonical(col(textCol)).as("ct"))
     val wpos = base.select(col("id"),
       posexplode(graft.expressions.RollingWindows.rollingWindows(
         col("ct"), k)).as(Seq("pos", "wh")))
-    val wposCp =
-      if (persistIntermediate) Some(graft.util.Blocks.checkpoint(wpos)) else None
-    val wposDf = wposCp.map(_.df).getOrElse(wpos)
+    val wposCp = graft.util.Blocks.checkpoint(wpos)
     // "occurs in >= 2 docs" as min(id) != max(id), NOT
     // count_distinct(id) >= 2: the distinct aggregate plans as TWO
     // exchanges of the (mostly-unique-hash) window stream — a (wh, id)
     // dedup pass then the count — while min/max is one partially
     // aggregable pass, and only the 2-vs-more cardinality question is
     // asked, never the exact count
-    val shared = wposDf
+    val shared = wposCp.df
       .groupBy(col("wh"))
       .agg(min(col("id")).as("_mn"), max(col("id")).as("_mx"))
       .where(col("_mn") =!= col("_mx"))
@@ -380,7 +361,7 @@ object Dedup {
     // emits each position once) and `shared` is one row per hash, so
     // the join cannot duplicate — a distinct here was one full extra
     // exchange of the matched stream for nothing
-    val covered = wposDf
+    val covered = wposCp.df
       .join(shared, "wh")
       .select(col("id"), col("pos"))
       .withColumn("_gap",
@@ -408,11 +389,9 @@ object Dedup {
           expr("(1000000 * coalesce(covered_chars, CAST(0 AS BIGINT)))" +
             " div total_chars"))
           .otherwise(lit(0L)).as("dup_ppm"))
-    if (persistIntermediate) {
-      val out = graft.util.Blocks.checkpoint(result)
-      wposCp.foreach(_.release())
-      out.df
-    } else result
+    val out = graft.util.Blocks.checkpoint(result)
+    wposCp.release()
+    out.df
   }
 
   /** Exact-substring duplicate REMOVAL with first-occurrence keep —
@@ -446,39 +425,30 @@ object Dedup {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      k: Int,
-      persistIntermediate: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
-    val base = docs.select(col(idCol).as("id"),
-      TextAnalysis.canonical(col(textCol)).as("ct"))
-    val baseCp =
-      if (persistIntermediate) Some(graft.util.Blocks.checkpoint(base)) else None
-    val baseDf = baseCp.map(_.df).getOrElse(base)
-    val wpos = baseDf.select(col("id"),
+    val baseCp = graft.util.Blocks.checkpoint(docs.select(col(idCol).as("id"),
+      TextAnalysis.canonical(col(textCol)).as("ct")))
+    val wposCp = graft.util.Blocks.checkpoint(baseCp.df.select(col("id"),
       posexplode(graft.expressions.RollingWindows.rollingWindows(
-        col("ct"), k)).as(Seq("pos", "wh")))
-    val wposCp =
-      if (persistIntermediate) Some(graft.util.Blocks.checkpoint(wpos)) else None
-    val wposDf = wposCp.map(_.df).getOrElse(wpos)
+        col("ct"), k)).as(Seq("pos", "wh"))))
     // min(id) carries the first-occurrence keeper and max(id) != min(id)
     // IS the ">= 2 distinct docs" test — one partially-aggregable pass
     // instead of count_distinct's two-exchange distinct aggregate (see
     // [[spanCoverage]])
-    val firstDoc = wposDf
+    val firstDoc = wposCp.df
       .groupBy(col("wh"))
       .agg(min(col("id")).as("_first"), max(col("id")).as("_mx"))
       .where(col("_first") =!= col("_mx"))
       .select(col("wh"), col("_first"))
-    val removable = wposDf
+    val removable = wposCp.df
       .join(firstDoc, "wh")
       .where(col("id") =!= col("_first"))
       .select(col("id"), col("pos"))
-    if (persistIntermediate) {
-      val out = graft.util.Blocks.checkpoint(
-        scrubByPositions(baseDf, removable, idCol, k, dedupPositions = false))
-      wposCp.foreach(_.release()); baseCp.foreach(_.release())
-      out.df
-    } else scrubByPositions(baseDf, removable, idCol, k, dedupPositions = false)
+    val out = graft.util.Blocks.checkpoint(
+      scrubByPositions(baseCp.df, removable, idCol, k, dedupPositions = false))
+    wposCp.release(); baseCp.release()
+    out.df
   }
 
   /** The interval-union + rewrite stage of [[removeSharedSpans]],
@@ -780,27 +750,6 @@ object Dedup {
       fped.schema.add("might_dup", BooleanType, nullable = false))
   }
 
-  /** Cross-corpus boilerplate LINE removal — the CCNet/RefinedWeb
-    * cleaning stage that within-document repetition metrics (q47)
-    * cannot see: a line occurring (trim-normalized, non-empty) in at
-    * least `minDocs` DISTINCT documents is navigation/footer/cookie
-    * boilerplate and is struck from every document that carries it.
-    *
-    * Shape at scale: one explode of the corpus into (doc, pos, line);
-    * line document-frequencies partial-aggregate before their shuffle
-    * (the groupBy(norm) map-side combine), and the boilerplate set is
-    * SMALL by construction (only lines repeated across ≥ minDocs docs
-    * survive the HAVING), so the membership join back is
-    * broadcast-sized for AQE; one final shuffle on the doc id
-    * reassembles documents (array_sort over (pos, …) structs — no
-    * window). Nothing driver-side anywhere.
-    *
-    * Output: one row per input document — `n_kept`, `n_dropped` line
-    * counts and `clean_text` (the surviving lines re-joined in
-    * original order; "" when everything was boilerplate). A null text
-    * coalesces to "" so the one-row-per-document contract holds for it
-    * too (`n_kept = 1` — the single empty line, never boilerplate —
-    * and an empty `clean_text`). */
   /** WITHIN-document line dedup — the intra-doc twin of
     * [[stripCommonLines]] (which strikes lines shared ACROSS docs):
     * keep only the FIRST occurrence of each distinct trimmed line
@@ -840,6 +789,27 @@ object Dedup {
             x => x.getField("line"))).as("clean_text"))
   }
 
+  /** Cross-corpus boilerplate LINE removal — the CCNet/RefinedWeb
+    * cleaning stage that within-document repetition metrics (q47)
+    * cannot see: a line occurring (trim-normalized, non-empty) in at
+    * least `minDocs` DISTINCT documents is navigation/footer/cookie
+    * boilerplate and is struck from every document that carries it.
+    *
+    * Shape at scale: one explode of the corpus into (doc, pos, line);
+    * line document-frequencies partial-aggregate before their shuffle
+    * (the groupBy(norm) map-side combine), and the boilerplate set is
+    * SMALL by construction (only lines repeated across ≥ minDocs docs
+    * survive the HAVING), so the membership join back is
+    * broadcast-sized for AQE; one final shuffle on the doc id
+    * reassembles documents (array_sort over (pos, …) structs — no
+    * window). Nothing driver-side anywhere.
+    *
+    * Output: one row per input document — `n_kept`, `n_dropped` line
+    * counts and `clean_text` (the surviving lines re-joined in
+    * original order; "" when everything was boilerplate). A null text
+    * coalesces to "" so the one-row-per-document contract holds for it
+    * too (`n_kept = 1` — the single empty line, never boilerplate —
+    * and an empty `clean_text`). */
   def stripCommonLines(
       df: DataFrame,
       idCol: String,
@@ -939,30 +909,15 @@ object Dedup {
     * quadratic output. `edgesPerDoc ≥ 2` keeps fragmentation rare in
     * practice; 8 is a comfortable default.
     *
-    * @return (id, comp) cluster labels — the [[connectedComponents]]
-    *         output shape, ready for [[keepCanonical]]. */
-  def nearDupCollapse(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleK: Int = 3,
-      numPerm: Int = 32,
-      bands: Int = 8,
-      threshold: Double = 0.5,
-      maxBucketSize: Int = 100000,
-      edgesPerDoc: Int = 8,
-      directBucketMax: Int = 64): DataFrame =
-    nearDupCollapseFromShingles(
-      shingleTable(df, idCol, textCol, shingleK),
-      numPerm, bands, threshold, maxBucketSize, edgesPerDoc,
-      directBucketMax)
-
-  /** [[nearDupCollapse]] over a PRE-BUILT shingle table (`id`, `sh` —
-    * the [[shingleTable]] shape), so the caller picks the similarity
+    * The input is a PRE-BUILT shingle table (`id`, `sh` — the
+    * [[shingleTable]] shape), so the caller picks the similarity
     * space: word shingles for the q21 family, char n-grams to collapse
     * the same graph the exact q23/q26 path walks. The table is
     * checkpointed here (consumed by the signature aggregation and both
-    * verify-join sides) and released before returning. */
+    * verify-join sides) and released before returning.
+    *
+    * @return (id, comp) cluster labels — the [[connectedComponents]]
+    *         output shape, ready for [[keepCanonical]]. */
   def nearDupCollapseFromShingles(
       shingled: DataFrame,
       numPerm: Int = 32,
@@ -1218,46 +1173,43 @@ object Dedup {
     * universe:
     *
     *  - `"prefix"` — AllPairs/PPJoin prefix filtering
-    *    ([[jaccardJoinPrefix]]). Wins when tokens are drawn from a
-    *    LARGE vocabulary (word shingles): every document has genuinely
+    *    ([[jaccardJoinPrefixFrom]]). Wins when tokens are drawn from
+    *    a LARGE vocabulary (word shingles): every document has genuinely
     *    rare tokens, so the candidate volume Σ_t C(prefix-df t, 2)
     *    stays near-linear in the corpus.
     *  - `"bitmap"` — dictionary-coded popcount kernel
-    *    ([[jaccardJoinBitmap]]). Wins when the per-block vocabulary is
-    *    SMALL (char 3-grams: a few thousand distinct shingles), where
-    *    prefix filtering degrades with corpus growth — every token's
-    *    df scales with the corpus, "rare" stops existing, and the
-    *    candidate set approaches all-pairs (measured at 10× sf0.1:
-    *    68 % of all same-block pairs survived the prefix+positional
-    *    filters, and the candidate dedup shuffle dominated the query).
+    *    ([[jaccardJoinBitmapFrom]]). Wins when the per-block
+    *    vocabulary is SMALL (char 3-grams: a few thousand distinct
+    *    shingles), where prefix filtering degrades with corpus growth
+    *    — every token's df scales with the corpus, "rare" stops
+    *    existing, and the candidate set approaches all-pairs
+    *    (measured at 10× sf0.1: 68 % of all same-block pairs survived
+    *    the prefix+positional filters, and the candidate dedup shuffle
+    *    dominated the query).
     *
     * `"auto"` (the default) measures the largest per-block vocabulary
     * EXACTLY from one shared `(blk, token)` distinct pass and picks
-    * bitmap iff it fits `bitmapVocabLimit` bits (default 2¹⁶ = 8 KB
-    * per document bitmap). The same distinct pass IS the bitmap tier's
+    * bitmap iff it fits [[BitmapVocabLimit]] bits (2¹⁶ = 8 KB per
+    * document bitmap). The same distinct pass IS the bitmap tier's
     * dictionary, so the probe costs nothing extra when bitmap wins —
     * and the dictionary reaches documents by broadcast
     * ([[graft.expressions.BitmapOps.encodeSorted]]) while its total
     * entry count stays under [[BroadcastVocabEntriesLimit]], falling
     * back to the (blk, token)-keyed join encode beyond.
     *
-    * Storage lifecycle (`persistIntermediate = true`, the default): the
-    * result is materialized EAGERLY into a local checkpoint and every
-    * internal persist (the shared shingle table, the tier's prefix /
-    * chunked-bitmap table) is released before this returns — so the
-    * only storage the operator leaves behind is the pair list itself,
-    * already computed and cheap to re-consume. Callers that feed the
-    * pairs into a further eager step (e.g. [[connectedComponents]])
-    * should free even that via [[graft.util.Blocks.release]] once the
-    * downstream result is materialized. Without the eager
+    * Storage lifecycle: the result is materialized EAGERLY into a
+    * local checkpoint and every internal persist (the shared shingle
+    * table, the tier's prefix / chunked-bitmap table) is released
+    * before this returns — so the only storage the operator leaves
+    * behind is the pair list itself, already computed and cheap to
+    * re-consume. Callers that feed the pairs into a further eager step
+    * (e.g. [[connectedComponents]]) should free even that via
+    * [[graft.util.Blocks.release]] once the downstream result is
+    * materialized. Without the eager
     * materialization there is no safe point to release the internal
     * persists: the returned plan still references them, and leaving
     * them to GC-driven cleanup measurably taxes every later query in a
     * long-lived JVM (the round-8 `storage_residue_bytes` finding).
-    * `persistIntermediate = false` returns the fully LAZY plan with no
-    * storage at all (each consumer re-evaluates the shingle pipeline —
-    * measured 12 source scans; only for single-consumer callers that
-    * cannot afford the materialization).
     *
     * @param docs columns: `id`, `blk` (block/language — only same-block
     *             pairs compared), `sh` (distinct-element token array)
@@ -1265,11 +1217,8 @@ object Dedup {
   def jaccardJoin(
       docs: DataFrame,
       threshold: Double,
-      persistIntermediate: Boolean = true,
-      tier: String = "auto",
-      bitmapVocabLimit: Int = 1 << 16): DataFrame =
-    jaccardJoinShaped(docs, threshold, persistIntermediate, tier,
-      bitmapVocabLimit, identity)
+      tier: String = "auto"): DataFrame =
+    jaccardJoinShaped(docs, threshold, tier, identity)
 
   /** [[jaccardJoin]] restricted to CROSS-SIDE pairs: `docs` carries an
     * extra non-null `sideCol`, and only pairs whose side values DIFFER
@@ -1285,11 +1234,8 @@ object Dedup {
       docs: DataFrame,
       threshold: Double,
       sideCol: String,
-      persistIntermediate: Boolean = true,
-      tier: String = "auto",
-      bitmapVocabLimit: Int = 1 << 16): DataFrame =
-    jaccardJoinShaped(docs, threshold, persistIntermediate, tier,
-      bitmapVocabLimit, identity, sideCol = Some(sideCol))
+      tier: String = "auto"): DataFrame =
+    jaccardJoinShaped(docs, threshold, tier, identity, sideCol = Some(sideCol))
 
   /** [[jaccardJoin]] reduced to a connectivity-preserving SPANNING
     * FOREST of the pair graph — the pair tier for CLUSTER consumers
@@ -1314,10 +1260,8 @@ object Dedup {
   def jaccardForestPairs(
       docs: DataFrame,
       threshold: Double,
-      tier: String = "auto",
-      bitmapVocabLimit: Int = 1 << 16): DataFrame =
-    jaccardJoinShaped(docs, threshold, persistIntermediate = true, tier,
-      bitmapVocabLimit, spanningForestWithin)
+      tier: String = "auto"): DataFrame =
+    jaccardJoinShaped(docs, threshold, tier, spanningForestWithin)
 
   /** Per-partition connectivity-preserving spanning forest over a
     * (id_a, id_b, ...) pair stream; see [[jaccardForestPairs]]. */
@@ -1337,31 +1281,24 @@ object Dedup {
   private def jaccardJoinShaped(
       docs: DataFrame,
       threshold: Double,
-      persistIntermediate: Boolean,
       tier: String,
-      bitmapVocabLimit: Int,
       shape: DataFrame => DataFrame,
       sideCol: Option[String] = None): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"jaccardJoin: threshold must be in (0, 1], got $threshold")
-    if (!persistIntermediate)
-      shape(jaccardJoinFrom(docs, threshold, identity, tier, bitmapVocabLimit,
-        sideCol))
-    else graft.util.Blocks.withTracked { track =>
+    graft.util.Blocks.withTracked { track =>
       graft.util.Blocks.checkpoint(
-        shape(jaccardJoinFrom(docs, threshold, track, tier, bitmapVocabLimit,
-          sideCol))).df
+        shape(jaccardJoinFrom(docs, threshold, track, tier, sideCol))).df
     }
   }
 
   /** The tier dispatch + shared shingle table behind [[jaccardJoin]];
-    * `maybePersist` is the caller's storage policy (identity = lazy). */
+    * `maybePersist` is the caller's storage policy. */
   private def jaccardJoinFrom(
       docs: DataFrame,
       threshold: Double,
       maybePersist: DataFrame => DataFrame,
       tier: String,
-      bitmapVocabLimit: Int,
       sideCol: Option[String] = None): DataFrame = {
     // No `where(n > 0)` guard here — a pushed-down predicate carries the
     // full shingle-expression tree below any upstream repartition and
@@ -1400,7 +1337,7 @@ object Dedup {
       .head()
     val (vocabMax, vocabTotal, maxDocs) =
       (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    if (tier == "bitmap" || vocabMax <= bitmapVocabLimit)
+    if (tier == "bitmap" || vocabMax <= BitmapVocabLimit)
       jaccardJoinBitmapFrom(withN, tokset, threshold, maybePersist,
         broadcastEncode = vocabTotal <= BroadcastVocabEntriesLimit,
         maxDocs = maxDocs, sideCol = sideCol)
@@ -1418,21 +1355,9 @@ object Dedup {
     * blocks before the fallback engages. */
   val BroadcastVocabEntriesLimit: Long = 1L << 21
 
-  /** The prefix-filtering tier of [[jaccardJoin]], forced (large-vocab
-    * regime — word shingles). */
-  def jaccardJoinPrefix(
-      docs: DataFrame,
-      threshold: Double,
-      persistIntermediate: Boolean = true): DataFrame =
-    jaccardJoin(docs, threshold, persistIntermediate, tier = "prefix")
-
-  /** The dictionary-bitmap tier of [[jaccardJoin]], forced (small-vocab
-    * regime — char n-grams). */
-  def jaccardJoinBitmap(
-      docs: DataFrame,
-      threshold: Double,
-      persistIntermediate: Boolean = true): DataFrame =
-    jaccardJoin(docs, threshold, persistIntermediate, tier = "bitmap")
+  /** Largest per-block vocabulary the auto tier sends to the bitmap
+    * tier: 2¹⁶ bits = 8 KB per document bitmap. */
+  private val BitmapVocabLimit = 1 << 16
 
   /** AllPairs/PPJoin prefix filtering: under a global token order
     * (rarest-first by per-block document frequency), two sets with
@@ -1958,29 +1883,6 @@ object Dedup {
     (0 until numPerm).map(_ => (next() % MersennePrime, next() % MersennePrime))
   }
 
-  /** MinHash signatures as one row per doc with numPerm scalar columns
-    * m0..m{numPerm-1}.
-    *
-    * Plan shape matters here: computing the signature as nested
-    * array-lambda expressions (transform/array_min per permutation)
-    * multiplies the shingle pipeline into every permutation's expression
-    * tree — higher-order functions are interpreted, not codegen'd, so the
-    * whole thing re-evaluates the tokenizer hundreds of times per row.
-    * Instead we explode to (id, shingleHash) rows — one xxhash per
-    * shingle — and fold the permutations with a single hash aggregation
-    * of numPerm codegen'd scalar `min` expressions. Map-side partial
-    * aggregation collapses each doc to one row before the shuffle, so
-    * shuffle volume is O(docs × numPerm longs) regardless of text size.
-    */
-  def minHashSignatures(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleK: Int,
-      numPerm: Int): DataFrame =
-    minHashSignaturesFromShingles(shingleTable(df, idCol, textCol, shingleK),
-      numPerm)
-
   /** The (`id`, `sh` distinct word-shingle array) table the MinHash
     * family consumes — factored out so callers that need the shingles
     * for MORE than the signatures (the verify join, an inline exact
@@ -1998,8 +1900,21 @@ object Dedup {
       array_distinct(graft.expressions.WordNGrams
         .wsNGrams(col(textCol), shingleK)).as("sh"))
 
-  /** [[minHashSignatures]] over a PRE-BUILT shingle table (`id`, `sh` —
-    * the [[shingleTable]] shape). */
+  /** MinHash signatures as one row per doc with numPerm scalar columns
+    * m0..m{numPerm-1}, over a PRE-BUILT shingle table (`id`, `sh` — the
+    * [[shingleTable]] shape).
+    *
+    * Plan shape matters here: computing the signature as nested
+    * array-lambda expressions (transform/array_min per permutation)
+    * multiplies the shingle pipeline into every permutation's expression
+    * tree — higher-order functions are interpreted, not codegen'd, so the
+    * whole thing re-evaluates the tokenizer hundreds of times per row.
+    * Instead we explode to (id, shingleHash) rows — one xxhash per
+    * shingle — and fold the permutations with a single hash aggregation
+    * of numPerm codegen'd scalar `min` expressions. Map-side partial
+    * aggregation collapses each doc to one row before the shuffle, so
+    * shuffle volume is O(docs × numPerm longs) regardless of text size.
+    */
   def minHashSignaturesFromShingles(
       shingled: DataFrame,
       numPerm: Int): DataFrame = {
@@ -2038,54 +1953,21 @@ object Dedup {
       .where(col("bsz") <= maxBucketSize)
       .drop("bsz")
 
-  /** MinHash/LSH near-duplicate pairs: candidate pairs share ≥1 LSH band
-    * bucket; candidates are verified with exact Jaccard over the shingle
-    * arrays and kept when ≥ `threshold`.
+  /** MinHash/LSH near-duplicate pairs over a PRE-BUILT shingle table
+    * (`id`, `sh` — the [[shingleTable]] shape): candidate pairs share
+    * ≥1 LSH band bucket; candidates are verified with exact Jaccard
+    * over the shingle arrays and kept when ≥ `threshold`.
     *
     * Plan shape: explode shingles → signature agg (shuffle on id) →
     * explode bands → shuffle on (band, bucket) → per-bucket self-join
     * (bounded by `maxBucketSize`) → distinct pairs → verify. No stage
     * touches the full cross product.
     *
-    * Storage lifecycle mirrors [[jaccardJoin]]: with
-    * `persistIntermediate = true` (default) the shared shingle table
-    * and the capped-bucket table are materialized while the result is
-    * computed into an eager checkpoint, then released — the pair list
-    * is the only storage left behind ([[graft.util.Blocks.release]]
-    * frees even that). `false` = fully lazy, no storage.
-    */
-  def minHashDedup(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleK: Int = 3,
-      numPerm: Int = 32,
-      bands: Int = 8,
-      threshold: Double = 0.5,
-      maxBucketSize: Int = 100000,
-      persistIntermediate: Boolean = true): DataFrame = {
-    val shingled = shingleTable(df, idCol, textCol, shingleK)
-    if (!persistIntermediate)
-      minHashDedupFromShingles(shingled, numPerm, bands, threshold,
-        maxBucketSize)
-    else {
-      val shCp = graft.util.Blocks.checkpoint(shingled)
-      val out = graft.util.Blocks.withTracked { track =>
-        graft.util.Blocks.checkpoint(
-          minHashDedupFromShingles(shCp.df, numPerm, bands, threshold,
-            maxBucketSize, track))
-      }
-      shCp.release()
-      out.df
-    }
-  }
-
-  /** [[minHashDedup]] over a PRE-BUILT shingle table (`id`, `sh` — the
-    * [[shingleTable]] shape). LAZY: the caller owns the shingle table's
-    * lifecycle (typically an eager checkpoint shared with other
-    * consumers — the table is read by the signature aggregation AND
-    * both verify-join sides) and `maybePersist` is its storage policy
-    * for the capped-bucket table (consumed by both self-join sides). */
+    * LAZY: the caller owns the shingle table's lifecycle (typically an
+    * eager checkpoint shared with other consumers — the table is read
+    * by the signature aggregation AND both verify-join sides) and
+    * `maybePersist` is its storage policy for the capped-bucket table
+    * (consumed by both self-join sides). */
   def minHashDedupFromShingles(
       shingled: DataFrame,
       numPerm: Int = 32,
@@ -2118,11 +2000,12 @@ object Dedup {
   /** 64-bit SimHash per doc: sum per bit position of +1/-1 weighted by
     * each token's xxhash64 bit, then take the sign.
     *
-    * Same plan-shape reasoning as [[minHashSignatures]]: explode to
-    * (id, tokenHash) rows — one xxhash per token — then one hash
-    * aggregation with 64 codegen'd scalar `sum` expressions; the final
-    * sign-bit packing is 64 cheap scalar conditionals on the aggregated
-    * row. Map-side combine keeps shuffle volume at O(docs × 64 longs). */
+    * Same plan-shape reasoning as [[minHashSignaturesFromShingles]]:
+    * explode to (id, tokenHash) rows — one xxhash per token — then one
+    * hash aggregation with 64 codegen'd scalar `sum` expressions; the
+    * final sign-bit packing is 64 cheap scalar conditionals on the
+    * aggregated row. Map-side combine keeps shuffle volume at
+    * O(docs × 64 longs). */
   def simHashSignatures(
       df: DataFrame,
       idCol: String,
@@ -2142,43 +2025,17 @@ object Dedup {
     sums.select(col("id"), sig.as("sig"))
   }
 
-  /** SimHash near-dup pairs: block on 16-bit quarters of the signature
-    * (a pair within hamming distance ≤ 3 of a 64-bit signature must agree
-    * exactly on at least one of the 4 quarters — pigeonhole), verify with
-    * popcount of XOR ≤ maxHamming. Degenerate quarter-buckets are capped
-    * like the MinHash buckets.
+  /** SimHash near-dup pairs over PRE-COMPUTED signatures (`id`, `sig`
+    * — the [[simHashSignatures]] shape): block on 16-bit quarters of
+    * the signature (a pair within hamming distance ≤ 3 of a 64-bit
+    * signature must agree exactly on at least one of the 4 quarters —
+    * pigeonhole), verify with popcount of XOR ≤ maxHamming. Degenerate
+    * quarter-buckets are capped like the MinHash buckets.
     *
-    * Storage lifecycle mirrors [[jaccardJoin]]: with
-    * `persistIntermediate = true` (default) the signature table and the
-    * capped-bucket table are materialized while the result is computed
-    * into an eager checkpoint, then released. `false` = fully lazy. */
-  def simHashDedup(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 100000,
-      persistIntermediate: Boolean = true): DataFrame = {
-    val sigs = simHashSignatures(df, idCol, textCol)
-    if (!persistIntermediate)
-      simHashDedupFromSigs(sigs, maxHamming, maxBucketSize)
-    else {
-      val sigCp = graft.util.Blocks.checkpoint(sigs)
-      val out = graft.util.Blocks.withTracked { track =>
-        graft.util.Blocks.checkpoint(
-          simHashDedupFromSigs(sigCp.df, maxHamming, maxBucketSize, track))
-      }
-      sigCp.release()
-      out.df
-    }
-  }
-
-  /** [[simHashDedup]] over PRE-COMPUTED signatures (`id`, `sig` — the
-    * [[simHashSignatures]] shape). LAZY: callers that also consume the
-    * signatures elsewhere (e.g. an inline exact-recall check) compute
-    * them once, own their lifecycle, and pass their storage policy for
-    * the capped-bucket table (consumed by both self-join sides) via
-    * `maybePersist`. */
+    * LAZY: callers that also consume the signatures elsewhere (e.g. an
+    * inline exact-recall check) compute them once, own their
+    * lifecycle, and pass their storage policy for the capped-bucket
+    * table (consumed by both self-join sides) via `maybePersist`. */
   def simHashDedupFromSigs(
       sigs: DataFrame,
       maxHamming: Int = 3,
@@ -2252,11 +2109,12 @@ object Dedup {
     * cheap second signal, e.g. a length band is already included here)
     * before falling back to [[jaccardJoin]], whose prefix-filtering
     * tier tolerates skew natively. `maxBlockSize` is the hard
-    * backstop (the [[minHashDedup]] `maxBucketSize` policy): blocks
-    * over the cap are dropped ENTIRELY — a deterministic, documented
-    * recall trade that bounds the worst task, instead of a hot prefix
-    * quadratically stalling the stage. The default (no cap) keeps the
-    * operator exact w.r.t. its blocking contract.
+    * backstop (the [[minHashDedupFromShingles]] `maxBucketSize`
+    * policy): blocks over the cap are dropped ENTIRELY — a
+    * deterministic, documented recall trade that bounds the worst
+    * task, instead of a hot prefix quadratically stalling the stage.
+    * The default (no cap) keeps the operator exact w.r.t. its blocking
+    * contract.
     *
     * @param docs    input with `idCol` and `textCol`
     * @return (`id_a`, `id_b`, `prefix_dist`, `len_a`, `len_b`) with

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * partitioning-deterministic).
   *
   * Tiers: feed it [[Dedup.jaccardJoin]] pairs for the EXACT audit
-  * (q39's registered, oracle-checked form) or [[Dedup.minHashDedup]] /
+  * (q39's registered, oracle-checked form) or
+  * [[Dedup.minHashDedupFromShingles]] /
   * banded candidates for the 100 TB path — the audit consumes pairs,
   * so its cost and recall are exactly the chosen pair tier's. A
   * planted cross-split duplicate survives every tier (identical docs

@@ -212,6 +212,42 @@ object PipelineQueries {
         .where(bit_count(col("psig").bitwiseXOR(col("csig"))) <= maxHamming))
   }
 
+  /** The perceptual queries' corpus: one payload seed per doc — each
+    * 4-doc family shares the structural high word, members differ in
+    * the low word — plus the planted identical pair on `plantedSeeds`. */
+  private def seededCorpus(s: SparkSession, dir: String,
+      plantedSeeds: Long): DataFrame = {
+    import s.implicits._
+    docsSpreadCpu(s, dir)
+      .select(col("doc_id"),
+        ((expr("doc_id div 4") % 1000000000L) * lit(4294967296L)
+          + pmod(col("doc_id"), lit(4)) + lit(1)).cast("long").as("seeds"))
+      .unionByName(Seq((PlantA, plantedSeeds), (PlantB, plantedSeeds))
+        .toDF("doc_id", "seeds"))
+  }
+
+  /** Hamming ≤ 3 pairs over a 64-bit signature checkpoint (`id`,
+    * `sig`) with their gate: the pair list and the probe truth are
+    * materialized while the capped buckets are tracked, `sigCp` is
+    * released, and every row carries `planted_ok` plus the recall
+    * check at floor 1.0 (the quarter-pigeonhole blocking is lossless
+    * at hamming ≤ 3, so this certifies exactness). */
+  private def hammingPairsGated(
+      sigCp: graft.util.Blocks.Checkpointed): DataFrame = {
+    import graft.util.Blocks
+    val (outCp, truthCp) = Blocks.withTracked { track =>
+      (Blocks.checkpoint(
+        Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
+          maybePersist = track)),
+        Blocks.checkpoint(
+          simhashPairTruthFromSigs(sigCp.df, maxHamming = 3)))
+    }
+    sigCp.release()
+    plantedAndRecallFrom(outCp.df, plantedPairCond, truthCp.df,
+      Seq("id_a", "id_b"), floor = 1.0)
+      .orderBy(col("id_a"), col("id_b"))
+  }
+
   /** Exact cosine partners ≥ threshold of the probe vectors across the
     * whole corpus — truth for the OR-amplified LSH blocker. */
   private def cosinePairTruth(
@@ -281,18 +317,7 @@ object PipelineQueries {
       .unionByName(plantedDocs(s))
     val sigCp = Blocks.checkpoint(
       Dedup.simHashSignatures(corpus, "doc_id", "text"))
-    val (outCp, truthCp) = Blocks.withTracked { track =>
-      (Blocks.checkpoint(
-        Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
-          maybePersist = track)),
-        Blocks.checkpoint(
-          simhashPairTruthFromSigs(sigCp.df, maxHamming = 3)))
-    }
-    sigCp.release()
-    // pigeonhole blocking is lossless at hamming <= 3 -> exactness floor
-    plantedAndRecallFrom(outCp.df, plantedPairCond, truthCp.df,
-      Seq("id_a", "id_b"), floor = 1.0)
-      .orderBy(col("id_a"), col("id_b"))
+    hammingPairsGated(sigCp)
   }
 
   // ------------------------------------------------------------------ q23
@@ -1238,8 +1263,8 @@ object PipelineQueries {
       |FROM comp ORDER BY doc_id""".stripMargin
 
   // ------------------------------------------------------------------ q54
-  /** CLUSTER-FIRST collapse ([[Dedup.nearDupCollapse]]): docs →
-    * canonical keeps with NO materialized pair list — the scale
+  /** CLUSTER-FIRST collapse ([[Dedup.nearDupCollapseFromShingles]]):
+    * docs → canonical keeps with NO materialized pair list — the scale
     * contract for dense-dup corpora. q23/q26/q99 are pair-exact and
     * pay the cluster-quadratic pair set (measured: 301 M pairs on the
     * 100× corpus, ~13 min); this path rides the sub-linear MinHash
@@ -3538,8 +3563,9 @@ object PipelineQueries {
     * cluster and therefore one split — implied by the hash-exact
     * oracle, which re-derives the clusters with the q26 recursive CTE
     * and the same split CASE. Exact tier at gate scale; at corpus
-    * scale the caller feeds [[Dedup.nearDupCollapse]]'s cluster-first
-    * labels instead — the split logic is label-source-agnostic. */
+    * scale the caller feeds [[Dedup.nearDupCollapseFromShingles]]'s
+    * cluster-first labels instead — the split logic is
+    * label-source-agnostic. */
   def q132LeakageSafeSplit(s: SparkSession, dir: String): DataFrame = {
     val docs = docsSpread(s, dir)
       .select(col("doc_id"), col("lang"), col("text"))
@@ -4280,28 +4306,12 @@ object PipelineQueries {
   def q149AudioFingerprint(s: SparkSession, dir: String): DataFrame = {
     import graft.expressions.{AudioFp, WavTone}
     import graft.util.Blocks
-    import s.implicits._
-    val plantedSeeds = 555000555L * 4294967296L + 2L
-    val corpus = docsSpreadCpu(s, dir)
-      .select(col("doc_id"),
-        ((expr("doc_id div 4") % 1000000000L) * lit(4294967296L)
-          + pmod(col("doc_id"), lit(4)) + lit(1)).cast("long").as("seeds"))
-      .unionByName(Seq((PlantA, plantedSeeds), (PlantB, plantedSeeds))
-        .toDF("doc_id", "seeds"))
+    val corpus = seededCorpus(s, dir,
+      plantedSeeds = 555000555L * 4294967296L + 2L)
     val sigCp = Blocks.checkpoint(corpus.select(col("doc_id").as("id"),
       AudioFp.audioFp(WavTone.wavTone(lit(16000), lit(6400), col("seeds")))
         .as("sig")))
-    val (outCp, truthCp) = Blocks.withTracked { track =>
-      (Blocks.checkpoint(
-        Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
-          maybePersist = track)),
-        Blocks.checkpoint(
-          simhashPairTruthFromSigs(sigCp.df, maxHamming = 3)))
-    }
-    sigCp.release()
-    plantedAndRecallFrom(outCp.df, plantedPairCond, truthCp.df,
-      Seq("id_a", "id_b"), floor = 1.0)
-      .orderBy(col("id_a"), col("id_b"))
+    hammingPairsGated(sigCp)
   }
 
   // ------------------------------------------------------------------ q148
@@ -4399,28 +4409,12 @@ object PipelineQueries {
   def q145ImageDhash(s: SparkSession, dir: String): DataFrame = {
     import graft.expressions.{DHash, PngImage}
     import graft.util.Blocks
-    import s.implicits._
-    val plantedSeeds = 777000777L * 4294967296L + 3L
-    val corpus = docsSpreadCpu(s, dir)
-      .select(col("doc_id"),
-        ((expr("doc_id div 4") % 1000000000L) * lit(4294967296L)
-          + pmod(col("doc_id"), lit(4)) + lit(1)).cast("long").as("seeds"))
-      .unionByName(Seq((PlantA, plantedSeeds), (PlantB, plantedSeeds))
-        .toDF("doc_id", "seeds"))
+    val corpus = seededCorpus(s, dir,
+      plantedSeeds = 777000777L * 4294967296L + 3L)
     val sigCp = Blocks.checkpoint(corpus.select(col("doc_id").as("id"),
       DHash.dhash(PngImage.pngImage(lit(72), lit(64), col("seeds")))
         .as("sig")))
-    val (outCp, truthCp) = Blocks.withTracked { track =>
-      (Blocks.checkpoint(
-        Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
-          maybePersist = track)),
-        Blocks.checkpoint(
-          simhashPairTruthFromSigs(sigCp.df, maxHamming = 3)))
-    }
-    sigCp.release()
-    plantedAndRecallFrom(outCp.df, plantedPairCond, truthCp.df,
-      Seq("id_a", "id_b"), floor = 1.0)
-      .orderBy(col("id_a"), col("id_b"))
+    hammingPairsGated(sigCp)
   }
 
   // ------------------------------------------------------------------ q151
@@ -4438,14 +4432,8 @@ object PipelineQueries {
   def q151GifDhash(s: SparkSession, dir: String): DataFrame = {
     import graft.expressions.{DHash, GifImage, PngImage}
     import graft.util.Blocks
-    import s.implicits._
-    val plantedSeeds = 666000666L * 4294967296L + 3L
-    val corpus = docsSpreadCpu(s, dir)
-      .select(col("doc_id"),
-        ((expr("doc_id div 4") % 1000000000L) * lit(4294967296L)
-          + pmod(col("doc_id"), lit(4)) + lit(1)).cast("long").as("seeds"))
-      .unionByName(Seq((PlantA, plantedSeeds), (PlantB, plantedSeeds))
-        .toDF("doc_id", "seeds"))
+    val corpus = seededCorpus(s, dir,
+      plantedSeeds = 666000666L * 4294967296L + 3L)
     // container by id parity: codegen's CaseWhen builds only the
     // branch taken per row, so each row pays one encoder
     val payload = when(pmod(col("doc_id"), lit(2)) === 0,
@@ -4453,17 +4441,7 @@ object PipelineQueries {
       .otherwise(GifImage.gifImage(lit(72), lit(64), col("seeds")))
     val sigCp = Blocks.checkpoint(corpus.select(col("doc_id").as("id"),
       DHash.dhash(payload).as("sig")))
-    val (outCp, truthCp) = Blocks.withTracked { track =>
-      (Blocks.checkpoint(
-        Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
-          maybePersist = track)),
-        Blocks.checkpoint(
-          simhashPairTruthFromSigs(sigCp.df, maxHamming = 3)))
-    }
-    sigCp.release()
-    plantedAndRecallFrom(outCp.df, plantedPairCond, truthCp.df,
-      Seq("id_a", "id_b"), floor = 1.0)
-      .orderBy(col("id_a"), col("id_b"))
+    hammingPairsGated(sigCp)
   }
 
   // ------------------------------------------------------------------ q152
@@ -4484,14 +4462,8 @@ object PipelineQueries {
   def q152JpegDhash(s: SparkSession, dir: String): DataFrame = {
     import graft.expressions.{DHash, GifImage, JpegImage, PngImage}
     import graft.util.Blocks
-    import s.implicits._
-    val plantedSeeds = 444000444L * 4294967296L + 3L
-    val corpus = docsSpreadCpu(s, dir)
-      .select(col("doc_id"),
-        ((expr("doc_id div 4") % 1000000000L) * lit(4294967296L)
-          + pmod(col("doc_id"), lit(4)) + lit(1)).cast("long").as("seeds"))
-      .unionByName(Seq((PlantA, plantedSeeds), (PlantB, plantedSeeds))
-        .toDF("doc_id", "seeds"))
+    val corpus = seededCorpus(s, dir,
+      plantedSeeds = 444000444L * 4294967296L + 3L)
     // container cycles by id; the planted ids (< 0) pin to JPEG so the
     // guaranteed pair never crosses the lossy boundary. CaseWhen
     // codegen builds only the branch taken per row.
@@ -4504,17 +4476,7 @@ object PipelineQueries {
       .otherwise(JpegImage.jpegImage(lit(72), lit(64), col("seeds")))
     val sigCp = Blocks.checkpoint(corpus.select(col("doc_id").as("id"),
       DHash.dhash(payload).as("sig")))
-    val (outCp, truthCp) = Blocks.withTracked { track =>
-      (Blocks.checkpoint(
-        Dedup.simHashDedupFromSigs(sigCp.df, maxHamming = 3,
-          maybePersist = track)),
-        Blocks.checkpoint(
-          simhashPairTruthFromSigs(sigCp.df, maxHamming = 3)))
-    }
-    sigCp.release()
-    plantedAndRecallFrom(outCp.df, plantedPairCond, truthCp.df,
-      Seq("id_a", "id_b"), floor = 1.0)
-      .orderBy(col("id_a"), col("id_b"))
+    hammingPairsGated(sigCp)
   }
 
   // ------------------------------------------------------------------ q147
@@ -4531,14 +4493,8 @@ object PipelineQueries {
   def q147ImageCollapse(s: SparkSession, dir: String): DataFrame = {
     import graft.expressions.{DHash, PngImage}
     import graft.util.Blocks
-    import s.implicits._
-    val plantedSeeds = 777000777L * 4294967296L + 3L
-    val corpus = docsSpreadCpu(s, dir)
-      .select(col("doc_id"),
-        ((expr("doc_id div 4") % 1000000000L) * lit(4294967296L)
-          + pmod(col("doc_id"), lit(4)) + lit(1)).cast("long").as("seeds"))
-      .unionByName(Seq((PlantA, plantedSeeds), (PlantB, plantedSeeds))
-        .toDF("doc_id", "seeds"))
+    val corpus = seededCorpus(s, dir,
+      plantedSeeds = 777000777L * 4294967296L + 3L)
     val imgCp = Blocks.checkpoint(corpus.select(col("doc_id").as("id"),
       PngImage.pngImage(lit(72), lit(64), col("seeds")).as("payload")))
     val sigCp = Blocks.checkpoint(imgCp.df.select(col("id"),

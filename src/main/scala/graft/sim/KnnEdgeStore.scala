@@ -60,18 +60,11 @@ object KnnEdgeStore {
       spark: SparkSession,
       store: String,
       beforeVersion: Long = Long.MaxValue): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(store)
-    // filesystem OF THE STORE PATH, never the default FS
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val versions =
-      if (!fs.exists(base)) Array.empty[Long]
-      else fs.listStatus(base).map(_.getPath.getName)
-        .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit))
-        .map(_.drop(1).toLong)
-        .filter(_ < beforeVersion)
+      graft.streaming.VersionPrune.versions(spark, store, beforeVersion)
     require(versions.nonEmpty,
       s"no committed edge snapshot below version $beforeVersion at $store")
-    spark.read.parquet(s"$store/v${versions.max}")
+    spark.read.parquet(s"$store/v${versions.last}")
   }
 
   /** Retention: keep the newest `keep` snapshots (floor 2 — the replay

@@ -83,17 +83,9 @@ object IncrementalPipeline {
       storePath: String,
       emptyLike: => DataFrame,
       beforeVersion: Long = Long.MaxValue): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(storePath)
-    // Path-based FS resolution: the store may live on a non-default
-    // scheme, and the default FS would report it missing.
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions =
-      if (!fs.exists(base)) Array.empty[Long]
-      else fs.listStatus(base).map(_.getPath.getName)
-        .filter(_.startsWith("v")).map(_.drop(1).toLong)
-        .filter(_ < beforeVersion)
+    val versions = VersionPrune.versions(spark, storePath, beforeVersion)
     if (versions.isEmpty) emptyLike
-    else spark.read.parquet(s"$storePath/v${versions.max}")
+    else spark.read.parquet(s"$storePath/v${versions.last}")
   }
 
   /** The complete per-batch kernel `start` wires into foreachBatch:

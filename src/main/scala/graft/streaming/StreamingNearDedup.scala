@@ -25,34 +25,16 @@ import graft.util.Blocks
   * Near-duplication here is the MinHash ESTIMATE — candidates must
   * share an LSH band and the fraction of agreeing signature components
   * must reach `simThreshold`. The batch operator
-  * ([[Dedup.minHashDedup]]) verifies candidates with exact Jaccard over
-  * shingle arrays; an ever-growing store of shingle arrays is corpus
-  * text re-materialized, so the streaming tier deliberately stores only
-  * the `numPerm`-long signature per doc (the standard E[estimate] =
-  * Jaccard estimator) and verifies against THAT. Identical documents
-  * estimate 1.0 in every component, so exact-duplicate recall is 1
-  * regardless of banding.
+  * ([[Dedup.minHashDedupFromShingles]]) verifies candidates with exact
+  * Jaccard over shingle arrays; an ever-growing store of shingle arrays
+  * is corpus text re-materialized, so the streaming tier deliberately
+  * stores only the `numPerm`-long signature per doc (the standard
+  * E[estimate] = Jaccard estimator) and verifies against THAT.
+  * Identical documents estimate 1.0 in every component, so
+  * exact-duplicate recall is 1 regardless of banding.
   *
-  * Store layout and the 100 TB read path: three parquet trees under
-  * `store/` —
-  *
-  *   buckets/batch_id=N/rng=R/ : (band, bkt, id)   candidate index
-  *   docs/batch_id=N/rng=R/    : (id, sig)         verification sigs
-  *   verdicts/batch_id=N/      : (id, is_dup, dup_of)
-  *
-  * Every batch OVERWRITES its own `batch_id` directories (replay
-  * idempotent), and every read of history filters `batch_id < current`
-  * — a PARTITION filter, so a replayed batch can never see its own
-  * earlier attempt. `rng = pmod(hash, Ranges)` is the scale lever: a
-  * batch's candidate probe touches only the `rng` directories its own
-  * bucket keys hash into, and its verification only the `rng`
-  * directories its candidate partner ids hash into — both pushed as
-  * partition filters over a driver-collected range list that is ≤
-  * `Ranges` values BY CONSTRUCTION. On top of the pruning, both
-  * history joins BROADCAST the batch side, so the store is only ever
-  * STREAMED through (one pass, no shuffle of history) — per-batch cost
-  * is linear in the surviving store partitions, zero exchange on the
-  * big side.
+  * Store layout and read path: [[BandIndexStore]], shared with
+  * [[StreamingSimhashDedup]].
   */
 object StreamingNearDedup {
 
@@ -78,9 +60,6 @@ object StreamingNearDedup {
     aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, e) => acc + e).cast("double") / size(a)
 
-  private def rngOf(c: org.apache.spark.sql.Column, ranges: Int) =
-    pmod(xxhash64(c.cast("string")), lit(ranges.toLong))
-
   /** The batch's (id, sig array, band/bkt rows) — signatures via the
     * shared shingle pipeline, sig packed into one array column. */
   private def sigTable(batch: DataFrame, idCol: String, textCol: String,
@@ -92,33 +71,6 @@ object StreamingNearDedup {
       Dedup.bandKeys(p.bands, p.numPerm / p.bands).as("bb"))
   }
 
-  /** History buckets visible to `batchId`, pruned to the given ranges.
-    * Missing tree (first batch) → empty frame of the right shape. */
-  private def historyBuckets(spark: SparkSession, store: String,
-      batchId: Long, rngs: Seq[Long]): DataFrame =
-    readTree(spark, s"$store/buckets", "band INT, bkt BIGINT, id BIGINT, " +
-      "batch_id BIGINT, rng BIGINT")
-      .where(col("batch_id") < batchId && col("rng").isin(rngs: _*))
-
-  private def historyDocs(spark: SparkSession, store: String,
-      batchId: Long, rngs: Seq[Long]): DataFrame =
-    readTree(spark, s"$store/docs", "id BIGINT, sig ARRAY<BIGINT>, " +
-      "batch_id BIGINT, rng BIGINT")
-      .where(col("batch_id") < batchId && col("rng").isin(rngs: _*))
-
-  private def readTree(spark: SparkSession, path: String,
-      schema: String): DataFrame = {
-    val exists = try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    } catch { case _: Exception => false }
-    if (exists)
-      spark.read.option("basePath", path).parquet(path)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schema))
-  }
-
   /** The per-batch kernel `start` wires into foreachBatch. Public so a
     * backfill driver (or a spec) can run it against explicit frames. */
   def appendBatch(
@@ -128,8 +80,6 @@ object StreamingNearDedup {
       textCol: String,
       store: String,
       p: Params = Params()): Unit = {
-    val spark = batch.sparkSession
-
     // signatures + band buckets for THIS batch, materialized once —
     // consumed by the within-batch self-join, both history joins, the
     // verification joins and the store writes
@@ -139,59 +89,8 @@ object StreamingNearDedup {
         st.df.select(col("id"), explode(col("bb")).as("e"))
           .select(col("id"), col("e.band").as("band"), col("e.bucket").as("bkt")),
         p.maxBucketSize, Seq("band", "bkt")))
-
-    // ---- candidates within the batch: earlier = smaller id ----------
-    val inBatch = buckets.df.as("l")
-      .join(buckets.df.as("r"),
-        col("l.band") === col("r.band") && col("l.bkt") === col("r.bkt") &&
-          col("l.id") < col("r.id"))
-      .select(col("r.id").as("id"), col("l.id").as("partner"))
-
-    // ---- candidates vs history: batch side broadcasts, store streams
-    val touchedRngs = buckets.df
-      .select(rngOf(col("bkt"), p.ranges).as("rng")).distinct()
-      .collect().map(_.getLong(0)).toSeq // ≤ p.ranges values by construction
-    val hist = historyBuckets(spark, store, batchId, touchedRngs)
-    val cross = broadcast(buckets.df)
-      .join(hist.select(col("band"), col("bkt"), col("id").as("partner")),
-        Seq("band", "bkt"))
-      .select(col("id"), col("partner"))
-
-    val cands = Blocks.checkpoint(
-      inBatch.unionByName(cross).dropDuplicates("id", "partner"))
-
-    // ---- verify via signature agreement -----------------------------
-    val partnerRngs = cands.df
-      .select(rngOf(col("partner"), p.ranges).as("rng")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val partnerSigs = historyDocs(spark, store, batchId, partnerRngs)
-      .select(col("id").as("partner"), col("sig").as("psig"))
-      .unionByName(
-        st.df.select(col("id").as("partner"), col("sig").as("psig")))
-    val verified = broadcast(
-        cands.df.join(st.df.select(col("id"), col("sig")), "id"))
-      .join(partnerSigs, "partner")
-      .where(sigAgreement(col("sig"), col("psig")) >= p.simThreshold)
-      .groupBy(col("id"))
-      .agg(min(col("partner")).as("dup_of"))
-
-    val verdicts = st.df.select(col("id"))
-      .join(verified, Seq("id"), "left")
-      .select(col("id"), col("dup_of").isNotNull.as("is_dup"), col("dup_of"))
-
-    // ---- writes: per-batch overwrite = replay idempotent ------------
-    verdicts.write.mode("overwrite")
-      .parquet(s"$store/verdicts/batch_id=$batchId")
-    st.df.select(col("id"), col("sig"), rngOf(col("id"), p.ranges).as("rng"))
-      .write.partitionBy("rng").mode("overwrite")
-      .parquet(s"$store/docs/batch_id=$batchId")
-    buckets.df
-      .select(col("band"), col("bkt"), col("id"),
-        rngOf(col("bkt"), p.ranges).as("rng"))
-      .write.partitionBy("rng").mode("overwrite")
-      .parquet(s"$store/buckets/batch_id=$batchId")
-
-    cands.release(); buckets.release(); st.release()
+    BandIndexStore.appendBatch(st, buckets, batchId, store, p.ranges,
+      "ARRAY<BIGINT>", (sig, psig) => sigAgreement(sig, psig) >= p.simThreshold)
   }
 
   /** Wire a document stream into continuous near-dup annotation. */
@@ -209,21 +108,12 @@ object StreamingNearDedup {
       }
       .start()
 
-  /** Fold the two HISTORY trees' `batch_id ≤ upto` directories into
-    * one ([[StoreCompaction]] — the small-files bound for long-lived
-    * stores). The verdicts tree is deliberately left alone: its
-    * batch_id is data (which batch saw the doc), the per-batch hot
-    * path never reads it, and exporting/archiving it is the
-    * downstream consumer's lifecycle. `upto` must be ≤ the stream's
-    * last committed batch id. */
-  def compact(spark: SparkSession, store: String, upto: Long): Unit = {
-    StoreCompaction.compactTree(spark, s"$store/buckets", upto, Some("rng"))
-    StoreCompaction.compactTree(spark, s"$store/docs", upto, Some("rng"))
-  }
+  /** Fold the history trees' `batch_id ≤ upto` directories into one
+    * ([[BandIndexStore.compact]]). */
+  def compact(spark: SparkSession, store: String, upto: Long): Unit =
+    BandIndexStore.compact(spark, store, upto)
 
   /** All verdicts so far: (batch_id, id, is_dup, dup_of). */
   def verdicts(spark: SparkSession, store: String): DataFrame =
-    spark.read.option("basePath", s"$store/verdicts")
-      .parquet(s"$store/verdicts")
-      .select(col("batch_id"), col("id"), col("is_dup"), col("dup_of"))
+    BandIndexStore.verdicts(spark, store)
 }

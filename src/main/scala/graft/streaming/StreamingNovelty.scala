@@ -109,18 +109,9 @@ object StreamingNovelty {
   private def segmentPaths(
       spark: SparkSession,
       storePath: String,
-      beforeVersion: Long): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(storePath)
-    // filesystem OF THE STORE PATH, never the default FS
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).map(_.getPath.getName)
-      .filter(_.startsWith("v"))
-      .filter(_.drop(1).nonEmpty)
-      .filter(_.drop(1).forall(_.isDigit))
-      .filter(_.drop(1).toLong < beforeVersion)
-      .map(nm => s"$storePath/$nm").toIndexedSeq
-  }
+      beforeVersion: Long): Seq[String] =
+    VersionPrune.versions(spark, storePath, beforeVersion)
+      .map(v => s"$storePath/v$v")
 
   /** All per-batch verdicts emitted so far (the accumulated q133
     * surface over every scored document). Same segment layout as the

@@ -33,17 +33,7 @@ import graft.util.Blocks
   * per-item density. Blocks fold into the bucket key as
   * `block·2¹⁶ + quarter` (block must be a non-negative long below
   * 2⁴⁷), so the store layout — and its partition-pruned read path —
-  * stays identical to the MinHash store:
-  *
-  *   buckets/batch_id=N/rng=R/ : (band, bkt, id)   candidate index
-  *   docs/batch_id=N/rng=R/    : (id, sig)         verification sigs
-  *   verdicts/batch_id=N/      : (id, is_dup, dup_of)
-  *
-  * Every batch overwrites its own `batch_id` directories and every
-  * history read filters `batch_id < current` (partition filter — a
-  * replayed batch can never see its own earlier attempt); `rng`
-  * pruning + broadcast of the batch side mean history is only ever
-  * STREAMED through, no shuffle of the store. */
+  * stays identical to the MinHash store: one [[BandIndexStore]]. */
 object StreamingSimhashDedup {
 
   /** `maxHamming ≤ 3` keeps the 4×16-bit banding lossless (pigeonhole:
@@ -60,9 +50,6 @@ object StreamingSimhashDedup {
     require(ranges >= 1, s"ranges must be >= 1, got $ranges")
   }
 
-  private def rngOf(c: org.apache.spark.sql.Column, ranges: Int) =
-    pmod(xxhash64(c.cast("string")), lit(ranges.toLong))
-
   /** Four (band, bkt) rows per signature: bkt = block·2¹⁶ + 16-bit
     * quarter (block 0 when unblocked). */
   private def bucketTable(st: DataFrame, blocked: Boolean): DataFrame = {
@@ -73,31 +60,6 @@ object StreamingSimhashDedup {
             shiftright(col("sig"), q * 16).bitwiseAND(0xFFFFL)).as("bkt"))
       }: _*)).as("e"))
       .select(col("id"), col("e.band").as("band"), col("e.bkt").as("bkt"))
-  }
-
-  private def historyBuckets(spark: SparkSession, store: String,
-      batchId: Long, rngs: Seq[Long]): DataFrame =
-    readTree(spark, s"$store/buckets",
-      "band INT, bkt BIGINT, id BIGINT, batch_id BIGINT, rng BIGINT")
-      .where(col("batch_id") < batchId && col("rng").isin(rngs: _*))
-
-  private def historyDocs(spark: SparkSession, store: String,
-      batchId: Long, rngs: Seq[Long]): DataFrame =
-    readTree(spark, s"$store/docs",
-      "id BIGINT, sig BIGINT, batch_id BIGINT, rng BIGINT")
-      .where(col("batch_id") < batchId && col("rng").isin(rngs: _*))
-
-  private def readTree(spark: SparkSession, path: String,
-      schema: String): DataFrame = {
-    val exists = try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    } catch { case _: Exception => false }
-    if (exists)
-      spark.read.option("basePath", path).parquet(path)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schema))
   }
 
   /** The per-batch kernel `start` wires into foreachBatch. Public so a
@@ -112,70 +74,17 @@ object StreamingSimhashDedup {
       store: String,
       p: Params = Params(),
       blockCol: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    val blocked = blockCol.isDefined
-
     val base = batch.where(col(sigCol).isNotNull).select(
       (Seq(col(idCol).cast("long").as("id"),
         col(sigCol).cast("long").as("sig")) ++
         blockCol.map(c => col(c).cast("long").as("blk")).toSeq): _*)
     val st = Blocks.checkpoint(base)
     val buckets = Blocks.checkpoint(
-      Dedup.capBuckets(bucketTable(st.df, blocked),
+      Dedup.capBuckets(bucketTable(st.df, blockCol.isDefined),
         p.maxBucketSize, Seq("band", "bkt")))
-
-    // ---- candidates within the batch: earlier = smaller id ----------
-    val inBatch = buckets.df.as("l")
-      .join(buckets.df.as("r"),
-        col("l.band") === col("r.band") && col("l.bkt") === col("r.bkt") &&
-          col("l.id") < col("r.id"))
-      .select(col("r.id").as("id"), col("l.id").as("partner"))
-
-    // ---- candidates vs history: batch side broadcasts, store streams
-    val touchedRngs = buckets.df
-      .select(rngOf(col("bkt"), p.ranges).as("rng")).distinct()
-      .collect().map(_.getLong(0)).toSeq // ≤ p.ranges values by construction
-    val hist = historyBuckets(spark, store, batchId, touchedRngs)
-    val cross = broadcast(buckets.df)
-      .join(hist.select(col("band"), col("bkt"), col("id").as("partner")),
-        Seq("band", "bkt"))
-      .select(col("id"), col("partner"))
-
-    val cands = Blocks.checkpoint(
-      inBatch.unionByName(cross).dropDuplicates("id", "partner"))
-
-    // ---- verify: exact popcount of XOR ------------------------------
-    val partnerRngs = cands.df
-      .select(rngOf(col("partner"), p.ranges).as("rng")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val partnerSigs = historyDocs(spark, store, batchId, partnerRngs)
-      .select(col("id").as("partner"), col("sig").as("psig"))
-      .unionByName(
-        st.df.select(col("id").as("partner"), col("sig").as("psig")))
-    val verified = broadcast(
-        cands.df.join(st.df.select(col("id"), col("sig")), "id"))
-      .join(partnerSigs, "partner")
-      .where(bit_count(col("sig").bitwiseXOR(col("psig"))) <= p.maxHamming)
-      .groupBy(col("id"))
-      .agg(min(col("partner")).as("dup_of"))
-
-    val verdicts = st.df.select(col("id"))
-      .join(verified, Seq("id"), "left")
-      .select(col("id"), col("dup_of").isNotNull.as("is_dup"), col("dup_of"))
-
-    // ---- writes: per-batch overwrite = replay idempotent ------------
-    verdicts.write.mode("overwrite")
-      .parquet(s"$store/verdicts/batch_id=$batchId")
-    st.df.select(col("id"), col("sig"), rngOf(col("id"), p.ranges).as("rng"))
-      .write.partitionBy("rng").mode("overwrite")
-      .parquet(s"$store/docs/batch_id=$batchId")
-    buckets.df
-      .select(col("band"), col("bkt"), col("id"),
-        rngOf(col("bkt"), p.ranges).as("rng"))
-      .write.partitionBy("rng").mode("overwrite")
-      .parquet(s"$store/buckets/batch_id=$batchId")
-
-    cands.release(); buckets.release(); st.release()
+    // verify: exact popcount of XOR
+    BandIndexStore.appendBatch(st, buckets, batchId, store, p.ranges,
+      "BIGINT", (sig, psig) => bit_count(sig.bitwiseXOR(psig)) <= p.maxHamming)
   }
 
   /** Wire a signature stream into continuous perceptual-dup
@@ -195,17 +104,12 @@ object StreamingSimhashDedup {
       }
       .start()
 
-  /** Fold the two HISTORY trees' `batch_id ≤ upto` directories into
-    * one ([[StoreCompaction]]); the verdicts tree's batch_id is data,
-    * left to the downstream consumer's lifecycle. */
-  def compact(spark: SparkSession, store: String, upto: Long): Unit = {
-    StoreCompaction.compactTree(spark, s"$store/buckets", upto, Some("rng"))
-    StoreCompaction.compactTree(spark, s"$store/docs", upto, Some("rng"))
-  }
+  /** Fold the history trees' `batch_id ≤ upto` directories into one
+    * ([[BandIndexStore.compact]]). */
+  def compact(spark: SparkSession, store: String, upto: Long): Unit =
+    BandIndexStore.compact(spark, store, upto)
 
   /** All verdicts so far: (batch_id, id, is_dup, dup_of). */
   def verdicts(spark: SparkSession, store: String): DataFrame =
-    spark.read.option("basePath", s"$store/verdicts")
-      .parquet(s"$store/verdicts")
-      .select(col("batch_id"), col("id"), col("is_dup"), col("dup_of"))
+    BandIndexStore.verdicts(spark, store)
 }

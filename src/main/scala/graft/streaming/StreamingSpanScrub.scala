@@ -117,17 +117,9 @@ object StreamingSpanScrub {
   private def segmentPaths(
       spark: SparkSession,
       storePath: String,
-      beforeVersion: Long): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(storePath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).map(_.getPath.getName)
-      .filter(_.startsWith("v"))
-      .filter(_.drop(1).nonEmpty)
-      .filter(_.drop(1).forall(_.isDigit))
-      .filter(_.drop(1).toLong < beforeVersion)
-      .map(nm => s"$storePath/$nm").toIndexedSeq
-  }
+      beforeVersion: Long): Seq[String] =
+    VersionPrune.versions(spark, storePath, beforeVersion)
+      .map(v => s"$storePath/v$v")
 
   /** Wire a streaming document source into span-scrub maintenance. */
   def start(

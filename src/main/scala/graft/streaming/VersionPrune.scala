@@ -19,8 +19,36 @@ import org.apache.spark.sql.SparkSession
   * deletion runs oldest-first and never touches the retained set, so
   * an interrupted prune leaves a store every reader and replay still
   * accepts, and a re-run converges.
+  *
+  * [[versions]] is the one `v<N>` listing every snapshot-store reader
+  * and the prune share.
   */
 object VersionPrune {
+
+  private val VersionDir = "v(0|[1-9][0-9]*)".r
+
+  /** The `v<N>` snapshot ids under `storePath` strictly below
+    * `beforeVersion`, ascending — one `exists` and one `listStatus`.
+    * Only the names writers produce count (`v` + a batch id's decimal
+    * digits); a stray entry (`vtmp`, a bare `v`) is ignored, never
+    * parsed. Empty on a missing store. The filesystem is resolved from
+    * the store path, not the default FS — a store on a non-default
+    * scheme (s3a:// with a local default) would otherwise "not exist". */
+  def versions(
+      spark: SparkSession,
+      storePath: String,
+      beforeVersion: Long = Long.MaxValue): Seq[Long] = {
+    val base = new org.apache.hadoop.fs.Path(storePath)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(base)) Seq.empty
+    else fs.listStatus(base).toSeq.map(_.getPath.getName)
+      .flatMap {
+        case VersionDir(n) => n.toLongOption
+        case _ => None
+      }
+      .filter(_ < beforeVersion)
+      .sorted
+  }
 
   /** Delete all but the newest `keep` versions. Returns the pruned
     * version ids (oldest first). No-op on a missing store. */
@@ -29,20 +57,12 @@ object VersionPrune {
       storePath: String,
       keep: Int = 2): Seq[Long] = {
     require(keep >= 1, s"keep must be >= 1, got $keep")
-    val base = new org.apache.hadoop.fs.Path(storePath)
-    // Resolve the filesystem OF THE STORE PATH, not the default FS —
-    // a store on a non-default scheme (s3a:// with a local default)
-    // would otherwise "not exist" and never be pruned.
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return Seq.empty
-    val versions = fs.listStatus(base).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit))
-      .map(_.drop(1).toLong)
-      .sorted
-    val doomed = versions.dropRight(keep)
+    val doomed = versions(spark, storePath).dropRight(keep)
+    val fs = new org.apache.hadoop.fs.Path(storePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     doomed.foreach { v =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$storePath/v$v"), true)
     }
-    doomed.toSeq
+    doomed
   }
 }

@@ -40,7 +40,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minHashDedup finds near-dups and exact dups, skips unrelated") {
-    val pairs = Dedup.minHashDedup(docs, "id", "text", threshold = 0.5)
+    val pairs = Dedup.minHashDedupFromShingles(
+        Dedup.shingleTable(docs, "id", "text", 3), threshold = 0.5)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 4L)), "exact dup pair must survive")
     assert(pairs.contains((1L, 2L)) || pairs.contains((2L, 4L)),
@@ -50,15 +51,17 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minHash signature is deterministic across invocations") {
-    val a = Dedup.minHashSignatures(docs, "id", "text", 3, 16)
+    def sigs() = Dedup.minHashSignaturesFromShingles(
+        Dedup.shingleTable(docs, "id", "text", 3), 16)
       .orderBy("id").collect().map(_.toSeq)
-    val b = Dedup.minHashSignatures(docs, "id", "text", 3, 16)
-      .orderBy("id").collect().map(_.toSeq)
+    val a = sigs()
+    val b = sigs()
     assert(a.toSeq === b.toSeq)
   }
 
   test("simHashDedup: exact dup has hamming 0; unrelated doc stays out") {
-    val out = Dedup.simHashDedup(docs, "id", "text", maxHamming = 3)
+    val out = Dedup.simHashDedupFromSigs(
+        Dedup.simHashSignatures(docs, "id", "text"), maxHamming = 3)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
     assert(out.get((1L, 4L)) === Some(0))
     assert(!out.keySet.exists(p => p._1 == 3L || p._2 == 3L))
@@ -82,8 +85,7 @@ class DedupSpec extends SparkSpec {
         if j >= t
       } yield (a._1, b._1)).toSet
       val got = Dedup.jaccardJoin(
-          corpus.toDF("id", "blk", "sh"), threshold = t,
-          persistIntermediate = false, tier = tier)
+          corpus.toDF("id", "blk", "sh"), threshold = t, tier = tier)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === expected, s"threshold $t tier $tier")
     }
@@ -105,7 +107,7 @@ class DedupSpec extends SparkSpec {
       .select(col("id"), col("blk"),
         Dedup.charShingles(col("text"), 3).as("sh"))
     def run(tier: String) = Dedup.jaccardJoin(
-        corpus, threshold = 0.5, persistIntermediate = false, tier = tier)
+        corpus, threshold = 0.5, tier = tier)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val prefix = run("prefix")
     val bitmap = run("bitmap")
@@ -134,12 +136,10 @@ class DedupSpec extends SparkSpec {
     val sides = corpus.select(col("id"), col("side"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     def full(tier: String) = Dedup.jaccardJoin(
-        corpus.drop("side"), threshold = 0.5,
-        persistIntermediate = false, tier = tier)
+        corpus.drop("side"), threshold = 0.5, tier = tier)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     def cross(tier: String) = Dedup.jaccardJoinCross(
-        corpus, threshold = 0.5, sideCol = "side",
-        persistIntermediate = false, tier = tier)
+        corpus, threshold = 0.5, sideCol = "side", tier = tier)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     for (tier <- Seq("bitmap", "prefix")) {
       val expected = full(tier).filter(p => sides(p._1) != sides(p._2))
@@ -512,10 +512,11 @@ class DedupSpec extends SparkSpec {
     val many = (1L to 50L).map(i => (i, "identical boilerplate text here"))
       .toDF("id", "text")
     // bucket cap smaller than the group -> no pairs at all
-    val capped = Dedup.minHashDedup(many, "id", "text", maxBucketSize = 10)
+    val shingled = Dedup.shingleTable(many, "id", "text", 3)
+    val capped = Dedup.minHashDedupFromShingles(shingled, maxBucketSize = 10)
     assert(capped.count() === 0)
     // default cap -> all 50 pair up (50*49/2)
-    val full = Dedup.minHashDedup(many, "id", "text")
+    val full = Dedup.minHashDedupFromShingles(shingled)
     assert(full.count() === 50L * 49 / 2)
   }
 
@@ -588,7 +589,8 @@ class DedupSpec extends SparkSpec {
       Seq((900L, "totally unrelated words about weather patterns only"),
         (901L, "another disjoint document speaking of mountain ranges")))
       .toDF("id", "text")
-    val labels = Dedup.nearDupCollapse(docs, "id", "text",
+    val shingled = Dedup.shingleTable(docs, "id", "text", 3)
+    val labels = Dedup.nearDupCollapseFromShingles(shingled,
       threshold = 0.5, edgesPerDoc = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // each dense cluster collapses WHOLE to its min id, even with the
@@ -599,7 +601,7 @@ class DedupSpec extends SparkSpec {
     // unrelated docs never enter any cluster
     assert(!labels.contains(900L) && !labels.contains(901L))
     // and the labels agree with the UNCAPPED pair-exact path
-    val pairs = Dedup.minHashDedup(docs, "id", "text", threshold = 0.5)
+    val pairs = Dedup.minHashDedupFromShingles(shingled, threshold = 0.5)
     val exact = Dedup.connectedComponents(
         pairs.select(col("id_a"), col("id_b")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap

@@ -48,7 +48,8 @@ class SplitLeakageSpec extends SparkSpec {
       when(col("doc_id") === 900L, "train")
         .when(col("doc_id") === 901L, "val")
         .otherwise("train").as("split"))
-    val banded = Dedup.minHashDedup(docs, "doc_id", "text", threshold = 0.9)
+    val banded = Dedup.minHashDedupFromShingles(
+      Dedup.shingleTable(docs, "doc_id", "text", 3), threshold = 0.9)
     val out = SplitLeakage.audit(banded, sp).collect()
       .map(r => (r.getAs[Long]("eval_id"), r.getAs[Long]("best_train_id")))
     assert(out.contains((901L, 900L)),

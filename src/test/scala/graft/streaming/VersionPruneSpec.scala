@@ -66,4 +66,18 @@ class VersionPruneSpec extends SparkSpec {
     assert(VersionPrune.keepLatest(spark, store, keep = 2) === Seq.empty)
     assert(VersionPrune.keepLatest(spark, "/tmp/no-such-store-xyz") === Seq.empty)
   }
+
+  test("stray v-prefixed entries are ignored by readLatestDim and keepLatest") {
+    val (store, _) = buildStore(2)
+    Seq("vtmp", "v").foreach(n => Files.createDirectory(
+      java.nio.file.Paths.get(store, n)))
+    val latest = IncrementalPipeline.readLatestDim(
+        spark, store, sys.error("must exist"))
+      .orderBy("k").collect().map(_.toSeq).toSeq
+    assert(latest === spark.read.parquet(s"$store/v1")
+      .orderBy("k").collect().map(_.toSeq).toSeq)
+    assert(VersionPrune.keepLatest(spark, store, keep = 1) === Seq(0L))
+    val left = new java.io.File(store).list().toSet
+    assert(Set("v1", "vtmp", "v").subsetOf(left) && !left.contains("v0"))
+  }
 }
