@@ -66,9 +66,4 @@ object KnnEdgeStore {
       s"no committed edge snapshot below version $beforeVersion at $store")
     spark.read.parquet(s"$store/v${versions.last}")
   }
-
-  /** Retention: keep the newest `keep` snapshots (floor 2 — the replay
-    * contract of the snapshot-store family). */
-  def prune(spark: SparkSession, store: String, keep: Int = 2): Seq[Long] =
-    graft.streaming.VersionPrune.keepLatest(spark, store, keep)
 }

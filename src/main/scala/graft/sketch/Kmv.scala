@@ -1,6 +1,6 @@
 package graft.sketch
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** KMV (k-minimum-values / bottom-k theta) distinct-set sketches — the
@@ -27,12 +27,6 @@ object Kmv {
 
   /** 2^60 as an exactly-representable double (60-bit hash universe). */
   private val Universe: Double = 1.152921504606846976e18
-
-  /** 60-bit item hash: first 15 hex chars of md5(item ‖ salt) — fits a
-    * signed BIGINT on every engine, uniform over [0, 2^60). */
-  def hash60(item: Column, salt: String): Column =
-    conv(substring(md5(concat(item, lit(salt))), 1, 15), 16, 10)
-      .cast("long")
 
   /** Per-group KMV sketch: the k smallest DISTINCT 60-bit item hashes,
     * as (group, h) rows — ≤ |groups| · k rows total.

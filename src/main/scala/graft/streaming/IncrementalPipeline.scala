@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
 import graft.etl.Scd
 
 /** Incremental SCD maintenance as a Structured Streaming pipeline.
@@ -14,25 +13,17 @@ import graft.etl.Scd
   * max(date) in the new files against max(DateId) in the warehouse, then
   * branch into download → dedup → SCD update/insert). The Spark-native
   * analog needs no scheduler: a file-source stream discovers new files,
-  * an event-time watermark bounds dedup state, and `foreachBatch` applies
+  * an event-time watermark bounds dedup state, and each micro-batch applies
   * the same SCD upsert the batch path uses — one code path for initial
   * load and every increment.
   *
   * Plan shape at scale: each micro-batch shuffles only the batch (keyed
   * by natural key); the dim store is re-read per batch and joined on the
   * same key. Dedup state is bounded by the watermark delay, not by
-  * history. The versioned store keeps `foreachBatch` idempotent: batch n
-  * always rebuilds from the latest version BELOW n and rewrites v_n, so
-  * a replayed batch id reproduces the same snapshot instead of reading
-  * (or double-applying) its own failed attempt's output.
+  * history. The dim store is a [[VersionedStore]] snapshot store, which
+  * makes a replayed batch id reproduce its snapshot.
   */
 object IncrementalPipeline {
-
-  /** The warehouse watermark: latest period start in the stored dim —
-    * the distributed equivalent of the reference's
-    * `SELECT FullDate ... WHERE DateId = (SELECT MAX(DateId) ...)`. */
-  def warehouseWatermark(dim: DataFrame): DataFrame =
-    dim.agg(max(col("start_date")).as("max_date"))
 
   /** Merge an scdUpsert result into a dim snapshot: periods being
     * updated are replaced (matched on natural key + start_date), new
@@ -57,7 +48,7 @@ object IncrementalPipeline {
       .unionByName(toInsert.select(oldScd.columns.map(col): _*))
   }
 
-  /** The foreachBatch kernel: rebuild-and-split against the current dim,
+  /** The merge kernel: rebuild-and-split against the current dim,
     * then merge. Pure DataFrame in/out so it is unit-testable without a
     * streaming context. */
   def processBatch(
@@ -88,9 +79,8 @@ object IncrementalPipeline {
     else spark.read.parquet(s"$storePath/v${versions.last}")
   }
 
-  /** The complete per-batch kernel `start` wires into foreachBatch:
-    * read the pre-batch snapshot (versions < batchId — replay-safe),
-    * rebuild-and-split, write v$batchId. Exposed so replay semantics
+  /** The complete per-batch kernel: rebuild-and-split folded into the
+    * dim store ([[VersionedStore.fold]]). Exposed so replay semantics
     * are directly testable without a streaming context. */
   def runBatch(
       batch: DataFrame,
@@ -99,7 +89,6 @@ object IncrementalPipeline {
       attrs: Seq[String],
       dateCol: String,
       storePath: String): Unit = {
-    val spark = batch.sparkSession
     val records = batch.select((naturalKey +: attrs :+ dateCol).map(col): _*)
     val empty = records
       .withColumn("start_date", col(dateCol))
@@ -107,9 +96,8 @@ object IncrementalPipeline {
       .withColumn("is_current", lit(true))
       .drop(dateCol)
       .where(lit(false))
-    val old = readLatestDim(spark, storePath, empty, beforeVersion = batchId)
-    val next = processBatch(old, records, naturalKey, attrs, dateCol)
-    next.write.mode("overwrite").parquet(s"$storePath/v$batchId")
+    VersionedStore.fold(batch, batchId, storePath, empty)(
+      processBatch(_, records, naturalKey, attrs, dateCol))
   }
 
   /** Wire a streaming source of change records into incremental SCD
@@ -133,20 +121,7 @@ object IncrementalPipeline {
     val deduped = stream
       .withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark(Seq(naturalKey, dateCol) ++ attrs)
-    deduped.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runBatch(batch, batchId, naturalKey, attrs, dateCol, storePath)
-      }
-      .start()
+    VersionedStore.start(deduped, checkpoint)(
+      runBatch(_, _, naturalKey, attrs, dateCol, storePath))
   }
-
-  /** Production file-source entry: new parquet drops under `sourceDir`
-    * are discovered incrementally — the Spark-native replacement for the
-    * reference's HDFS-path-exists poll. */
-  def fromParquetDir(
-      spark: SparkSession,
-      sourceDir: String,
-      schema: StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(sourceDir)
 }

@@ -45,10 +45,11 @@ object StoreCompaction {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return
 
+    // a stray `batch_id=<not an id>` entry is neither read nor deleted
     def sourceDirs() = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-      .map(s => (s.getPath, s.getPath.getName.stripPrefix("batch_id=").toLong))
-      .filter(_._2 <= upto)
+      .filter(s => s.isDirectory &&
+        VersionPrune.batchIdOf(s.getPath.getName, "batch_id=").exists(_ <= upto))
+      .map(_.getPath)
 
     val staging = new Path(root, s".compact_upto=$upto")
     val done = new Path(staging, "_SUCCESS")
@@ -56,7 +57,7 @@ object StoreCompaction {
       val dirs = sourceDirs()
       if (dirs.size <= 1) return
       val src = spark.read.option("basePath", treePath)
-        .parquet(dirs.map(_._1.toString): _*)
+        .parquet(dirs.map(_.toString): _*)
       val dataCols = src.columns.filter(_ != "batch_id").map(col)
       val compacted = src.select(dataCols: _*)
       val laidOut = innerPartition match {
@@ -69,7 +70,12 @@ object StoreCompaction {
       }
       laidOut.mode("overwrite").parquet(staging.toString)
     }
-    sourceDirs().foreach { case (p, _) => fs.delete(p, true) }
-    fs.rename(staging, new Path(root, s"batch_id=$upto"))
+    sourceDirs().foreach(fs.delete(_, true))
+    // the sources are gone: a failed rename would leave the compacted
+    // rows hidden in the dot-prefixed staging directory
+    val target = new Path(root, s"batch_id=$upto")
+    if (!fs.rename(staging, target))
+      throw new java.io.IOException(
+        s"StoreCompaction: could not rename $staging to $target")
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental rolling-actives maintenance — the store tier of
   * [[graft.etl.RollingActives]] (q57/q58's operator family): the
@@ -20,13 +19,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * associative, idempotent — so any slicing of the same events into
   * micro-batches converges to the same per-day registers as one
   * batch over everything ([[StreamingActivesSpec]] proves estimate
-  * parity under shuffled slicings), and the versioned-store pattern
-  * ([[IncrementalPipeline.readLatestDim]]: batch n reads versions
-  * < n, writes v$n) makes a replayed batch reproduce rather than
-  * double-apply — harmless here even without versioning (idempotent
-  * union), but versioning also buys crash-replay invariance and
-  * [[VersionPrune]]/[[StoreCompaction]] composability shared with the
-  * other snapshot stores.
+  * parity under shuffled slicings). The snapshot lives in a
+  * [[VersionedStore]]: replaying a batch would be harmless here even
+  * without versioning (idempotent union), but the shared store also
+  * buys crash-replay invariance and [[VersionPrune]] retention.
   */
 object StreamingActives {
 
@@ -38,20 +34,16 @@ object StreamingActives {
     batch.groupBy(col(dayCol).cast("long").as("day"))
       .agg(hll_sketch_agg(col(userCol), lgConfigK).as("sk"))
 
-  /** foreachBatch kernel: union the batch's per-day sketches into the
-    * pre-batch snapshot (versions < batchId — replay-safe), write
-    * v$batchId. Days absent from the batch ride through via the
-    * union's identity. */
+  /** The per-batch kernel: union the batch's per-day sketches into the
+    * snapshot store ([[VersionedStore.fold]]). Days absent from the
+    * batch ride through via the union's identity. */
   def runBatch(batch: DataFrame, batchId: Long, userCol: String,
       dayCol: String, storePath: String, lgConfigK: Int = 12): Unit = {
-    val spark = batch.sparkSession
     val fresh = dailySketches(batch, userCol, dayCol, lgConfigK)
-    val old = IncrementalPipeline.readLatestDim(
-      spark, storePath, fresh.where(lit(false)), beforeVersion = batchId)
-    old.unionByName(fresh)
-      .groupBy(col("day"))
-      .agg(hll_union_agg(col("sk")).as("sk"))
-      .write.mode("overwrite").parquet(s"$storePath/v$batchId")
+    VersionedStore.fold(batch, batchId, storePath, fresh.where(lit(false)))(
+      _.unionByName(fresh)
+        .groupBy(col("day"))
+        .agg(hll_union_agg(col("sk")).as("sk")))
   }
 
   /** The rolling `window`-day distinct-actives series, derived from
@@ -76,23 +68,4 @@ object StreamingActives {
       .groupBy(col("report_day"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("active"))
   }
-
-  /** Retention: keep the newest `keep` snapshot versions
-    * ([[VersionPrune.keepLatest]]; `keep = 2` floor — replay rebuilds
-    * from the predecessor version). */
-  def prune(spark: SparkSession, storePath: String, keep: Int = 2): Seq[Long] =
-    VersionPrune.keepLatest(spark, storePath, keep)
-
-  /** Wire a streaming event source into store maintenance:
-    * checkpoint-tracked batch ids + the replay-safe versioned store
-    * give exactly-once snapshot semantics. */
-  def start(stream: DataFrame, userCol: String, dayCol: String,
-      storePath: String, checkpoint: String,
-      lgConfigK: Int = 12): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runBatch(batch, batchId, userCol, dayCol, storePath, lgConfigK)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.sim.Ann
 
 /** Incremental maintenance of an IVF (inverted-file) ANN index — the
@@ -70,10 +69,10 @@ object StreamingAnnIndex {
     q.centroids.toDF("cid", "cv", "c_dot")
   }
 
-  /** The per-batch kernel `start` wires into foreachBatch: assign each
-    * vector to its single nearest frozen centroid and write the posting
-    * rows under this batch's directory. Overwrite (not append) makes a
-    * replayed batch id idempotent. */
+  /** The per-batch kernel: assign each vector to its single nearest
+    * frozen centroid and write the posting rows under this batch's
+    * directory. Overwrite (not append) makes a replayed batch id
+    * idempotent. */
   def appendBatch(
       batch: DataFrame,
       batchId: Long,
@@ -92,22 +91,6 @@ object StreamingAnnIndex {
       .mode("overwrite")
       .parquet(s"$store/batch_id=$batchId")
   }
-
-  /** Wire a stream of (id, vector) rows into continuous index
-    * maintenance. */
-  def start(
-      stream: DataFrame,
-      quantizer: Quantizer,
-      idCol: String,
-      vecCol: String,
-      store: String,
-      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBatch(batch, batchId, quantizer, idCol, vecCol, store)
-      }
-      .start()
 
   /** Fold all `batch_id ≤ upto` posting directories into one
     * ([[StoreCompaction]] — the small-files bound for long-lived

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.retrieval.Bm25
 
 /** Incremental maintenance of a BM25 text index — the streaming tier
@@ -29,10 +28,9 @@ import graft.retrieval.Bm25
   *     idf/avgdl derive deterministically from them with the same
   *     round-once integer discipline as the batch tier.
   *
-  * Replay safety: stats rebuild from versions < batchId
-  * ([[IncrementalPipeline.readLatestDim]]); postings overwrite their
-  * batch directory. Retention: [[VersionPrune]] on stats (floor 2),
-  * [[StoreCompaction]] on postings.
+  * Replay safety: stats and totals are [[VersionedStore]] snapshot
+  * stores; postings overwrite their batch directory. Retention:
+  * [[VersionPrune]] on stats (floor 2), [[StoreCompaction]] on postings.
   */
 object StreamingBm25 {
 
@@ -51,10 +49,10 @@ object StreamingBm25 {
     Seq.empty[(Long, Long)].toDF("n_docs", "total_tokens")
   }
 
-  /** The per-batch kernel `start` wires into foreachBatch: write this
-    * batch's posting segment and fold its statistics into the
-    * versioned snapshot. Pure DataFrame logic, unit-testable without a
-    * streaming context. */
+  /** The per-batch kernel: write this batch's posting segment and fold
+    * its statistics into the stats and totals snapshot stores
+    * ([[VersionedStore.fold]]). Pure DataFrame logic, unit-testable
+    * without a streaming context. */
   def runBatch(
       batch: DataFrame,
       batchId: Long,
@@ -72,35 +70,16 @@ object StreamingBm25 {
       .parquet(s"$store/postings/batch_id=$batchId")
     // df snapshot: old + batch, summed (vocab-sized)
     val dfBatch = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    IncrementalPipeline.readLatestDim(
-        spark, s"$store/stats", emptyDf(spark), beforeVersion = batchId)
-      .unionByName(dfBatch)
-      .groupBy(col("token")).agg(sum(col("df")).as("df"))
-      .write.mode("overwrite").parquet(s"$store/stats/v$batchId")
+    VersionedStore.fold(batch, batchId, s"$store/stats", emptyDf(spark))(
+      _.unionByName(dfBatch)
+        .groupBy(col("token")).agg(sum(col("df")).as("df")))
     // totals snapshot: 1 row, summed
-    IncrementalPipeline.readLatestDim(
-        spark, s"$store/totals", emptyTotals(spark), beforeVersion = batchId)
-      .unionByName(dl.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("total_tokens")))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("total_tokens")).as("total_tokens"))
-      .write.mode("overwrite").parquet(s"$store/totals/v$batchId")
+    VersionedStore.fold(batch, batchId, s"$store/totals", emptyTotals(spark))(
+      _.unionByName(dl.agg(count(lit(1)).as("n_docs"),
+          coalesce(sum(col("dl")), lit(0L)).as("total_tokens")))
+        .agg(sum(col("n_docs")).as("n_docs"),
+          sum(col("total_tokens")).as("total_tokens")))
   }
-
-  /** Wire a streaming document source into continuous index
-    * maintenance. */
-  def start(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      store: String,
-      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runBatch(batch, batchId, idCol, textCol, store)
-      }
-      .start()
 
   /** Serve "more like this" from the STORED index: same semantics,
     * schema, tie-breaking and integer arithmetic as

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.functions.lit
 import graft.etl.Cdc
 
 /** Streaming CDC state maintenance — the streaming tier of
@@ -15,16 +15,17 @@ import graft.etl.Cdc
   * any batch boundary (a later batch carrying an older update cannot
   * resurrect a deleted key) — micro-batch slicing cannot change the
   * final state, which is exactly the property a replayed/rewound
-  * stream needs. Versioned store + batch-id gating give replay
-  * idempotence (same contract as [[StreamingRollup]] /
-  * [[IncrementalPipeline.readLatestDim]]).
+  * stream needs. Replay idempotence is the [[VersionedStore]] contract.
+  *
+  * Query the serving view with `Cdc.current(latest, opCol)`; compact
+  * tombstones offline with `Cdc.compact` once the replication-lateness
+  * horizon passes.
   */
 object StreamingCdc {
 
-  /** The per-batch kernel `start` wires into foreachBatch: read the
-    * pre-batch state (versions < batchId — replay-safe), merge, write
-    * v$batchId. Pure DataFrame logic, unit-testable without a
-    * streaming context. */
+  /** The per-batch kernel: `Cdc.applyLog` folded into the state store
+    * ([[VersionedStore.fold]]). Pure DataFrame logic, unit-testable
+    * without a streaming context. */
   def runBatch(
       batch: DataFrame,
       batchId: Long,
@@ -32,31 +33,7 @@ object StreamingCdc {
       tsCol: String,
       tieCol: String,
       opCol: String,
-      storePath: String): Unit = {
-    val spark = batch.sparkSession
-    val empty = batch.where(org.apache.spark.sql.functions.lit(false))
-    val old = IncrementalPipeline.readLatestDim(
-      spark, storePath, empty, beforeVersion = batchId)
-    Cdc.applyLog(old, batch, key, tsCol, tieCol, opCol)
-      .write.mode("overwrite").parquet(s"$storePath/v$batchId")
-  }
-
-  /** Wire a streaming change-record source into CDC maintenance. Query
-    * the serving view with `Cdc.current(spark.read.parquet(latest),
-    * opCol)`; compact tombstones offline with `Cdc.compact` once the
-    * replication-lateness horizon passes. */
-  def start(
-      stream: DataFrame,
-      key: String,
-      tsCol: String,
-      tieCol: String,
-      opCol: String,
-      storePath: String,
-      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runBatch(batch, batchId, key, tsCol, tieCol, opCol, storePath)
-      }
-      .start()
+      storePath: String): Unit =
+    VersionedStore.fold(batch, batchId, storePath, batch.where(lit(false)))(
+      Cdc.applyLog(_, batch, key, tsCol, tieCol, opCol))
 }

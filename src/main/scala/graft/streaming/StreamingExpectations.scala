@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.etl.Expectations
 
 /** Continuous data-quality monitoring — the streaming tier of
@@ -23,7 +22,8 @@ import graft.etl.Expectations
   * read time is the cheap and safe contract. */
 object StreamingExpectations {
 
-  /** The per-batch kernel `start` wires into foreachBatch. */
+  /** The per-batch kernel (run per micro-batch by
+    * [[VersionedStore.start]]). */
   def runBatch(
       batch: DataFrame,
       batchId: Long,
@@ -47,17 +47,4 @@ object StreamingExpectations {
       metricsPath: String): DataFrame =
     spark.read.parquet(metricsPath)
       .dropDuplicates("batch_id", "constraint_name")
-
-  /** Wire a streaming source into continuous quality reporting. */
-  def start(
-      stream: DataFrame,
-      constraints: Seq[(String, Column)],
-      metricsPath: String,
-      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runBatch(batch, batchId, constraints, metricsPath)
-      }
-      .start()
 }

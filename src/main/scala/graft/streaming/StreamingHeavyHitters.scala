@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.text.{Mg, MgSummary, WordGrams}
 
 /** Streaming corpus heavy hitters — the sketch tier of
@@ -12,10 +11,8 @@ import graft.text.{Mg, MgSummary, WordGrams}
   * Each micro-batch is summarized DISTRIBUTED (per-partition
   * [[Mg.summarize]], driver-merged — bounded collect, ≤ capacity
   * entries per partition) and folded into the prior summary with the
-  * mergeable-summaries merge, persisted in a replay-safe versioned
-  * store (the [[StreamingRollup]] pattern: batch n reads versions < n
-  * and overwrites v_n, so a replayed batch reproduces instead of
-  * double-applying). Store size is `capacity + 1` rows per version —
+  * mergeable-summaries merge, persisted in a [[VersionedStore]]
+  * snapshot store. Store size is `capacity + 1` rows per version —
   * metadata scale by construction, independent of stream volume.
   *
   * What is and is not invariant to micro-batch slicing: the summary
@@ -55,9 +52,9 @@ object StreamingHeavyHitters {
     }
   }
 
-  /** The per-batch kernel `start` wires into foreachBatch: read the
-    * pre-batch summary (versions < batchId — replay-safe), merge the
-    * batch in, write v$batchId. */
+  /** The per-batch kernel: merge the batch's summary into the stored
+    * one ([[VersionedStore.fold]]). The prior summary is collected
+    * before the batch is summarized. */
   def runBatch(
       batch: DataFrame,
       batchId: Long,
@@ -65,9 +62,10 @@ object StreamingHeavyHitters {
       capacity: Int,
       storePath: String): Unit = {
     val spark = batch.sparkSession
-    val prior = readLatestSummary(spark, storePath, beforeVersion = batchId)
-    val merged = Mg.merge(prior, summarizeBatch(batch, textCol, capacity), capacity)
-    writeSummary(spark, merged, s"$storePath/v$batchId")
+    VersionedStore.fold(batch, batchId, storePath, emptySummaryDf(spark)) {
+      prior => summaryFrame(spark, Mg.merge(summaryOf(prior),
+        summarizeBatch(batch, textCol, capacity), capacity))
+    }
   }
 
   /** One meta row (null token, the summary's err/n/capacity) + one row
@@ -76,21 +74,15 @@ object StreamingHeavyHitters {
     * what lets [[heavyCandidates]] ENFORCE `k <= capacity` against a
     * store built by someone else — without it a too-large k silently
     * voids the superset guarantee. */
-  private def writeSummary(
-      spark: SparkSession, s: MgSummary, path: String): Unit = {
+  private def summaryFrame(spark: SparkSession, s: MgSummary): DataFrame = {
     import spark.implicits._
     val rows = (null.asInstanceOf[String], 0L, s.err, s.n, s.capacity) +:
       s.counts.toSeq.map { case (t, c) => (t, c, s.err, s.n, s.capacity) }
-    rows.toDF("token", "cnt", "err", "n", "capacity")
-      .coalesce(1).write.mode("overwrite").parquet(path)
+    rows.toDF("token", "cnt", "err", "n", "capacity").coalesce(1)
   }
 
-  def readLatestSummary(
-      spark: SparkSession,
-      storePath: String,
-      beforeVersion: Long = Long.MaxValue): MgSummary = {
-    val df = IncrementalPipeline.readLatestDim(
-      spark, storePath, emptySummaryDf(spark), beforeVersion)
+  /** The summary a stored frame holds (collected: `capacity + 1` rows). */
+  private def summaryOf(df: DataFrame): MgSummary = {
     val rows = df.collect()
     if (rows.isEmpty) Mg.empty
     else {
@@ -103,6 +95,13 @@ object StreamingHeavyHitters {
       MgSummary(counts, err, n, cap)
     }
   }
+
+  def readLatestSummary(
+      spark: SparkSession,
+      storePath: String,
+      beforeVersion: Long = Long.MaxValue): MgSummary =
+    summaryOf(IncrementalPipeline.readLatestDim(
+      spark, storePath, emptySummaryDf(spark), beforeVersion))
 
   private def emptySummaryDf(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -124,26 +123,4 @@ object StreamingHeavyHitters {
       .toDF("token", "cnt_lb", "cnt_ub", "guaranteed")
       .orderBy(desc("cnt_lb"), col("token"))
   }
-
-  /** Retention: drop all but the newest `keep` summary versions
-    * ([[VersionPrune.keepLatest]]; `keep = 2` floor — replay rebuilds
-    * from the predecessor version). Each version is only
-    * `capacity + 1` rows, but a year-long stream is ~10⁵ versions of
-    * file-listing overhead without this. */
-  def prune(spark: SparkSession, storePath: String, keep: Int = 2): Seq[Long] =
-    VersionPrune.keepLatest(spark, storePath, keep)
-
-  /** Wire a streaming document source into summary maintenance. */
-  def start(
-      stream: DataFrame,
-      textCol: String,
-      capacity: Int,
-      storePath: String,
-      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runBatch(batch, batchId, textCol, capacity, storePath)
-      }
-      .start()
 }

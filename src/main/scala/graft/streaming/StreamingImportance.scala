@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.curate.Importance
 
 /** Streaming importance-model maintenance — the streaming tier of
@@ -20,11 +19,9 @@ import graft.curate.Importance
   * batch q34 model bit-for-bit, and scoring any frame against it
   * equals the one-shot operator (exact-parity spec-proved).
   *
-  * Replay safety is the house versioned-store contract
-  * ([[IncrementalPipeline.readLatestDim]]): batch n rebuilds from
-  * versions < n, so a retried batch reproduces — never double-counts —
-  * its own earlier attempt. Retention via [[VersionPrune]] (floor 2:
-  * the predecessor version must survive for replay).
+  * Replay safety is the [[VersionedStore]] snapshot contract: a
+  * retried batch reproduces — never double-counts — its own earlier
+  * attempt.
   *
   * Scale: the snapshot is B rows (metadata) regardless of stream
   * volume; the per-batch pass is the same map-side-combinable count
@@ -37,10 +34,9 @@ object StreamingImportance {
     Seq.empty[(Long, Long, Long)].toDF("b", "c_r", "c_t")
   }
 
-  /** The per-batch kernel `start` wires into foreachBatch: count the
-    * batch, fold into the pre-batch snapshot (versions < batchId),
-    * write v$batchId. Pure DataFrame logic, unit-testable without a
-    * streaming context. */
+  /** The per-batch kernel: count the batch and fold the counts into the
+    * snapshot store ([[VersionedStore.fold]]). Pure DataFrame logic,
+    * unit-testable without a streaming context. */
   def runBatch(
       batch: DataFrame,
       batchId: Long,
@@ -49,14 +45,12 @@ object StreamingImportance {
       targetPred: Column,
       buckets: Int,
       storePath: String): Unit = {
-    val spark = batch.sparkSession
     val fresh = Importance.bucketCounts(batch, idCol, textCol, targetPred, buckets)
-    val old = IncrementalPipeline.readLatestDim(
-      spark, storePath, emptyCounts(spark), beforeVersion = batchId)
-    old.unionByName(fresh)
-      .groupBy(col("b"))
-      .agg(sum(col("c_r")).as("c_r"), sum(col("c_t")).as("c_t"))
-      .write.mode("overwrite").parquet(s"$storePath/v$batchId")
+    VersionedStore.fold(batch, batchId, storePath,
+        emptyCounts(batch.sparkSession))(
+      _.unionByName(fresh)
+        .groupBy(col("b"))
+        .agg(sum(col("c_r")).as("c_r"), sum(col("c_t")).as("c_t")))
   }
 
   /** The current model: the integer micro-nat score table derived from
@@ -79,24 +73,4 @@ object StreamingImportance {
       buckets: Int = Importance.DefaultBuckets): DataFrame =
     Importance.scoreDocs(docs, idCol, textCol, targetPred,
       scoreTable(docs.sparkSession, storePath, buckets), buckets)
-
-  /** Retention ([[VersionPrune.keepLatest]], floor keep = 2). */
-  def prune(spark: SparkSession, storePath: String, keep: Int = 2): Seq[Long] =
-    VersionPrune.keepLatest(spark, storePath, keep)
-
-  /** Wire a streaming document source into model maintenance. */
-  def start(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      targetPred: Column,
-      buckets: Int,
-      storePath: String,
-      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runBatch(batch, batchId, idCol, textCol, targetPred, buckets, storePath)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.sketch.Kmv
 import graft.text.WordGrams
 
@@ -13,9 +12,7 @@ import graft.text.WordGrams
   * Each micro-batch is sketched DISTRIBUTED ([[Kmv.minK]] over the
   * batch's word 8-grams — the corpus-side work, bounded bottom-k) and
   * folded into the prior sketch with [[Kmv.mergeSketches]], persisted
-  * in a replay-safe versioned store (the [[StreamingRollup]] pattern:
-  * batch n reads versions < n and overwrites v_n, so a replayed batch
-  * reproduces instead of double-applying). Store size is
+  * in a [[VersionedStore]] snapshot store. Store size is
   * ≤ |sources| · k rows per version — metadata scale by construction,
   * independent of stream volume.
   *
@@ -28,9 +25,8 @@ import graft.text.WordGrams
   */
 object StreamingKmv {
 
-  /** The per-batch kernel `start` wires into foreachBatch: sketch the
-    * batch, merge with the pre-batch store (versions < batchId —
-    * replay-safe), write v$batchId. */
+  /** The per-batch kernel: sketch the batch and merge it into the
+    * sketch store ([[VersionedStore.fold]]). */
   def runBatch(
       batch: DataFrame,
       batchId: Long,
@@ -40,14 +36,12 @@ object StreamingKmv {
       gramN: Int,
       k: Int,
       storePath: String): Unit = {
-    val spark = batch.sparkSession
     val grams = WordGrams.grams(batch, idCol, textCol, gramN)
       .join(batch.select(col(idCol), col(srcCol).as("_src")), Seq(idCol))
     val batchSketch = Kmv.minK(grams, "_src", "gram", k)
-    val prior = readLatestSketch(spark, storePath, beforeVersion = batchId)
-    Kmv.mergeSketches(prior, batchSketch, k)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$storePath/v$batchId")
+    VersionedStore.fold(batch, batchId, storePath,
+        emptySketchDf(batch.sparkSession))(
+      Kmv.mergeSketches(_, batchSketch, k).coalesce(1))
   }
 
   /** The latest stored sketch as (grp, h) rows — ≤ |sources| · k. */
@@ -72,26 +66,4 @@ object StreamingKmv {
       storePath: String,
       k: Int): DataFrame =
     Kmv.pairwiseOverlap(readLatestSketch(spark, storePath), k)
-
-  /** Retention: drop all but the newest `keep` sketch versions
-    * (`keep = 2` floor — replay rebuilds from the predecessor). */
-  def prune(spark: SparkSession, storePath: String, keep: Int = 2): Seq[Long] =
-    VersionPrune.keepLatest(spark, storePath, keep)
-
-  /** Wire a streaming document source into sketch maintenance. */
-  def start(
-      stream: DataFrame,
-      srcCol: String,
-      idCol: String,
-      textCol: String,
-      gramN: Int,
-      k: Int,
-      storePath: String,
-      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runBatch(batch, batchId, srcCol, idCol, textCol, gramN, k, storePath)
-      }
-      .start()
 }

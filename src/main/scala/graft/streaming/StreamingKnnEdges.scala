@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.sim.KnnEdgeStore
 
 /** Streaming maintenance of the persisted kNN-edge store
@@ -27,8 +26,8 @@ import graft.sim.KnnEdgeStore
   * between refreshes the graph is STALE by at most `refreshEvery`
   * batches — the same freshness trade as the frozen IVF quantizer,
   * chosen over per-batch O(corpus) rebuilds. [[StoreCompaction]] bounds
-  * the vector tree's file count; [[KnnEdgeStore.prune]] bounds snapshot
-  * history.
+  * the vector tree's file count; [[VersionPrune.keepLatest]] on
+  * `edges/` bounds snapshot history.
   */
 object StreamingKnnEdges {
 
@@ -78,43 +77,32 @@ object StreamingKnnEdges {
   def edges(spark: SparkSession, store: String): DataFrame =
     KnnEdgeStore.readLatest(spark, s"$store/edges")
 
-  /** Wire a stream of (id, vector) rows into continuous maintenance:
-    * vectors append every batch; the edge snapshot refreshes on every
-    * `refreshEvery`-th batch (and on batch 0, so the store serves a
-    * graph as soon as data exists). */
-  def start(
-      stream: DataFrame,
+  /** The per-batch kernel: vectors append every batch; the edge
+    * snapshot refreshes on every `refreshEvery`-th batch (and on batch
+    * 0, so the store serves a graph as soon as data exists). */
+  def runBatch(
+      batch: DataFrame,
+      batchId: Long,
       idCol: String,
       vecCol: String,
       store: String,
-      checkpoint: String,
       dim: Int,
       k: Int,
       refreshEvery: Int = 1,
       numTables: Int = 4,
       maxBucketSize: Int = 100000,
       numPlanes: Int = 0,
-      targetBucketSize: Int = 64): StreamingQuery = {
+      targetBucketSize: Int = 64): Unit = {
     require(refreshEvery >= 1,
       s"refreshEvery must be >= 1, got $refreshEvery")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendVectors(batch, batchId, idCol, vecCol, store)
-        if (batchId % refreshEvery == 0)
-          refresh(batch.sparkSession, store, batchId, dim, k, numTables,
-            maxBucketSize, numPlanes, targetBucketSize)
-      }
-      .start()
+    appendVectors(batch, batchId, idCol, vecCol, store)
+    if (batchId % refreshEvery == 0)
+      refresh(batch.sparkSession, store, batchId, dim, k, numTables,
+        maxBucketSize, numPlanes, targetBucketSize)
   }
 
   /** Fold vector batches `batch_id ≤ upto` into one directory (the
     * small-files bound for long-lived stores). */
   def compactVectors(spark: SparkSession, store: String, upto: Long): Unit =
     StoreCompaction.compactTree(spark, s"$store/vectors", upto, None)
-
-  /** Retention for edge snapshots (floor keep = 2, the snapshot-store
-    * replay contract). */
-  def prune(spark: SparkSession, store: String, keep: Int = 2): Seq[Long] =
-    KnnEdgeStore.prune(spark, s"$store/edges", keep)
 }

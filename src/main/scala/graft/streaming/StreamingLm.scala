@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.text.NgramLm
 
 /** Streaming bigram-LM maintenance — the streaming tier of
@@ -12,10 +11,11 @@ import graft.text.NgramLm
   * current at O(|batch| + B²) per trigger without rescanning the
   * corpus. The twin of [[StreamingImportance]]: counts are pure sums,
   * so ANY micro-batch slicing folds to the identical model
-  * (spec-proved exact parity with the one-shot operator), replay
-  * rebuilds from versions < batchId, and the serving path scores any
-  * frame against the stored model — the production shape, where the LM
-  * trains on a trusted corpus and filters an incoming crawl. */
+  * (spec-proved exact parity with the one-shot operator), the model
+  * lives in a [[VersionedStore]] snapshot store, and the serving path
+  * scores any frame against the stored model — the production shape,
+  * where the LM trains on a trusted corpus and filters an incoming
+  * crawl. */
 object StreamingLm {
 
   private def emptyCounts(spark: SparkSession): DataFrame = {
@@ -23,8 +23,8 @@ object StreamingLm {
     Seq.empty[(Long, Long, Long)].toDF("b1", "b2", "c_bi")
   }
 
-  /** foreachBatch kernel: count the batch, fold into the pre-batch
-    * snapshot, write v$batchId. Pure DataFrame logic. */
+  /** The per-batch kernel: count the batch and fold the counts into the
+    * snapshot store ([[VersionedStore.fold]]). Pure DataFrame logic. */
   def runBatch(
       batch: DataFrame,
       batchId: Long,
@@ -32,14 +32,12 @@ object StreamingLm {
       textCol: String,
       buckets: Int,
       storePath: String): Unit = {
-    val spark = batch.sparkSession
     val fresh = NgramLm.bigramCounts(batch, idCol, textCol, buckets)
-    val old = IncrementalPipeline.readLatestDim(
-      spark, storePath, emptyCounts(spark), beforeVersion = batchId)
-    old.unionByName(fresh)
-      .groupBy(col("b1"), col("b2"))
-      .agg(sum(col("c_bi")).as("c_bi"))
-      .write.mode("overwrite").parquet(s"$storePath/v$batchId")
+    VersionedStore.fold(batch, batchId, storePath,
+        emptyCounts(batch.sparkSession))(
+      _.unionByName(fresh)
+        .groupBy(col("b1"), col("b2"))
+        .agg(sum(col("c_bi")).as("c_bi")))
   }
 
   /** The latest count snapshot (≤ B² rows). */
@@ -65,23 +63,4 @@ object StreamingLm {
     NgramLm.scoreDocs(docs, idCol, textCol,
       NgramLm.scoreFromCounts(bi, buckets), NgramLm.contextCounts(bi), buckets)
   }
-
-  /** Retention ([[VersionPrune.keepLatest]], floor keep = 2). */
-  def prune(spark: SparkSession, storePath: String, keep: Int = 2): Seq[Long] =
-    VersionPrune.keepLatest(spark, storePath, keep)
-
-  /** Wire a streaming document source into LM maintenance. */
-  def start(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      buckets: Int,
-      storePath: String,
-      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runBatch(batch, batchId, idCol, textCol, buckets, storePath)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.dedup.Dedup
 import graft.util.Blocks
 
@@ -71,8 +70,9 @@ object StreamingNearDedup {
       Dedup.bandKeys(p.bands, p.numPerm / p.bands).as("bb"))
   }
 
-  /** The per-batch kernel `start` wires into foreachBatch. Public so a
-    * backfill driver (or a spec) can run it against explicit frames. */
+  /** The per-batch kernel (run per micro-batch by
+    * [[VersionedStore.start]]); a backfill driver (or a spec) can run it
+    * against explicit frames. */
   def appendBatch(
       batch: DataFrame,
       batchId: Long,
@@ -92,21 +92,6 @@ object StreamingNearDedup {
     BandIndexStore.appendBatch(st, buckets, batchId, store, p.ranges,
       "ARRAY<BIGINT>", (sig, psig) => sigAgreement(sig, psig) >= p.simThreshold)
   }
-
-  /** Wire a document stream into continuous near-dup annotation. */
-  def start(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      store: String,
-      checkpoint: String,
-      p: Params = Params()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBatch(batch, batchId, idCol, textCol, store, p)
-      }
-      .start()
 
   /** Fold the history trees' `batch_id ≤ upto` directories into one
     * ([[BandIndexStore.compact]]). */

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.text.WordGrams
 
 /** Streaming first-occurrence novelty — the incremental tier of the
@@ -13,12 +12,9 @@ import graft.text.WordGrams
   * n-gram ever seen, with the id of the document that introduced it.
   * First occurrence is append-once by construction — a gram belongs to
   * exactly ONE batch (the one that introduced it) — so the store is
-  * SEGMENTED, not snapshotted: batch n writes only its NEW grams under
-  * `v<n>`, readers union segments `< batchId`, and a replayed batch
-  * recomputes against the same predecessor segments and OVERWRITES its
-  * own — reproducing, never double-applying (the
-  * [[StreamingAnnIndex]] posting-segment discipline; a full-snapshot
-  * store would rewrite the whole vocabulary every batch).
+  * a [[VersionedStore]] SEGMENT store, not a snapshot: batch n writes
+  * only its NEW grams under `v<n>` (a full-snapshot store would rewrite
+  * the whole vocabulary every batch).
   *
   * Per batch it emits the q133 verdict columns for the batch's
   * documents: a gram is novel for doc d iff NO prior batch contains it
@@ -40,10 +36,11 @@ import graft.text.WordGrams
   */
 object StreamingNovelty {
 
-  /** The per-batch kernel `start` wires into foreachBatch: score the
-    * batch against segments < batchId, write the verdict segment to
-    * `outPath/v<batchId>` and the new-gram segment to
-    * `storePath/v<batchId>` (both overwrite — replay-idempotent).
+  /** The per-batch kernel: score the batch against the gram segments
+    * below `batchId`, then write the verdict segment under `outPath`
+    * and the new-gram segment under `storePath`
+    * ([[VersionedStore.writeSegment]] — both overwrite, so a replay
+    * reproduces them).
     *
     * Contract: `idCol` must be a LongType column (enforced here) and
     * is written out under the CANONICAL names the readers declare —
@@ -77,7 +74,7 @@ object StreamingNovelty {
           Seq("gram"), "left")
         .select(col("gram"), col("_first"),
           coalesce(col("_seen"), lit(false)).as("_seen")))
-    g.join(gramState, Seq("gram"))
+    val verdicts = g.join(gramState, Seq("gram"))
       .groupBy(col(idCol))
       .agg(
         count(lit(1)).as("n_grams"),
@@ -86,11 +83,11 @@ object StreamingNovelty {
       .select(col(idCol).as("doc_id"), col("n_grams"), col("n_novel"),
         expr("(1000000 * n_novel) div n_grams").as("novelty_ppm"))
       .withColumn("kept", col("novelty_ppm") >= keepFloorPpm)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$outPath/v$batchId")
-    gramState.where(!col("_seen"))
-      .select(col("gram"), col("_first").as("first_id"))
-      .write.mode("overwrite").parquet(s"$storePath/v$batchId")
+    VersionedStore.writeSegment(verdicts.coalesce(1), outPath, batchId)
+    VersionedStore.writeSegment(
+      gramState.where(!col("_seen"))
+        .select(col("gram"), col("_first").as("first_id")),
+      storePath, batchId)
   }
 
   /** Union of first-occurrence segments `< beforeVersion` — each gram
@@ -98,48 +95,19 @@ object StreamingNovelty {
   def readStore(
       spark: SparkSession,
       storePath: String,
-      beforeVersion: Long = Long.MaxValue): DataFrame = {
-    val segs = segmentPaths(spark, storePath, beforeVersion)
-    if (segs.isEmpty) {
+      beforeVersion: Long = Long.MaxValue): DataFrame =
+    VersionedStore.segments(spark, storePath, beforeVersion).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long)].toDF("gram", "first_id")
-    } else spark.read.parquet(segs: _*)
-  }
-
-  private def segmentPaths(
-      spark: SparkSession,
-      storePath: String,
-      beforeVersion: Long): Seq[String] =
-    VersionPrune.versions(spark, storePath, beforeVersion)
-      .map(v => s"$storePath/v$v")
+    }
 
   /** All per-batch verdicts emitted so far (the accumulated q133
     * surface over every scored document). Same segment layout as the
     * gram store; empty-store schema matches the verdict shape. */
-  def readVerdicts(spark: SparkSession, outPath: String): DataFrame = {
-    val segs = segmentPaths(spark, outPath, Long.MaxValue)
-    if (segs.isEmpty) {
+  def readVerdicts(spark: SparkSession, outPath: String): DataFrame =
+    VersionedStore.segments(spark, outPath).getOrElse {
       import spark.implicits._
       Seq.empty[(Long, Long, Long, Long, Boolean)]
         .toDF("doc_id", "n_grams", "n_novel", "novelty_ppm", "kept")
-    } else spark.read.parquet(segs: _*)
-  }
-
-  /** Wire a streaming document source into novelty maintenance. */
-  def start(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      keepFloorPpm: Long,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runBatch(batch, batchId, idCol, textCol, n, keepFloorPpm,
-          storePath, outPath)
-      }
-      .start()
+    }
 }

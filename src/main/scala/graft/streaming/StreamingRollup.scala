@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.functions.lit
 import graft.etl.IncrementalAgg
 
 /** Streaming materialized-rollup maintenance — the streaming tier of
@@ -10,36 +10,27 @@ import graft.etl.IncrementalAgg
   * dashboard aggregate stays current at O(|batch| + |snapshot|) per
   * trigger, never rescanning history.
   *
-  * Why foreachBatch and not a streaming aggregation sink: a native
-  * streaming `groupBy().agg()` in update mode holds every group in the
-  * state store FOREVER (rollup keys never expire) and cannot serve the
-  * snapshot as one consistent table; the versioned-store pattern
-  * ([[IncrementalPipeline.readLatestDim]]'s contract) gives replay
-  * idempotence — batch n always rebuilds from versions < n, so a
-  * retried batch reproduces the same snapshot instead of
-  * double-applying itself — and every version IS a full queryable
-  * rollup.
+  * Why a [[VersionedStore]] snapshot store and not a streaming
+  * aggregation sink: a native streaming `groupBy().agg()` in update mode
+  * holds every group in the state store FOREVER (rollup keys never
+  * expire) and cannot serve the snapshot as one consistent table; every
+  * store version IS a full queryable rollup, and the store's replay rule
+  * keeps a retried batch from double-applying itself.
   */
 object StreamingRollup {
 
-  /** The per-batch kernel `start` wires into foreachBatch: read the
-    * pre-batch snapshot (versions < batchId — replay-safe), merge,
-    * write v$batchId. Pure DataFrame logic, unit-testable without a
-    * streaming context. */
+  /** The per-batch kernel: `mergeRollup` folded into the snapshot store
+    * ([[VersionedStore.fold]]). Pure DataFrame logic, unit-testable
+    * without a streaming context. */
   def runBatch(
       batch: DataFrame,
       batchId: Long,
       keys: Seq[String],
       measures: Seq[(String, Column)],
-      storePath: String): Unit = {
-    val spark = batch.sparkSession
-    val empty = IncrementalAgg.rollup(batch, keys, measures)
-      .where(org.apache.spark.sql.functions.lit(false))
-    val old = IncrementalPipeline.readLatestDim(
-      spark, storePath, empty, beforeVersion = batchId)
-    IncrementalAgg.mergeRollup(old, batch, keys, measures)
-      .write.mode("overwrite").parquet(s"$storePath/v$batchId")
-  }
+      storePath: String): Unit =
+    VersionedStore.fold(batch, batchId, storePath,
+        IncrementalAgg.rollup(batch, keys, measures).where(lit(false)))(
+      IncrementalAgg.mergeRollup(_, batch, keys, measures))
 
   /** Retention: drop all but the newest `keep` snapshot versions
     * ([[VersionPrune.keepLatest]]; `keep = 2` floor — replay rebuilds
@@ -47,21 +38,4 @@ object StreamingRollup {
   def prune(spark: org.apache.spark.sql.SparkSession, storePath: String,
       keep: Int = 2): Seq[Long] =
     VersionPrune.keepLatest(spark, storePath, keep)
-
-  /** Wire a streaming fact source into rollup maintenance. The source
-    * rides append-only fact rows (file drops in production,
-    * MemoryStream in tests); exactly-once comes from the
-    * checkpoint-tracked batch ids + the replay-safe versioned store. */
-  def start(
-      stream: DataFrame,
-      keys: Seq[String],
-      measures: Seq[(String, Column)],
-      storePath: String,
-      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runBatch(batch, batchId, keys, measures, storePath)
-      }
-      .start()
 }

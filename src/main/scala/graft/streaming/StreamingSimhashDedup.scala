@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.dedup.Dedup
 import graft.util.Blocks
 
@@ -62,8 +61,9 @@ object StreamingSimhashDedup {
       .select(col("id"), col("e.band").as("band"), col("e.bkt").as("bkt"))
   }
 
-  /** The per-batch kernel `start` wires into foreachBatch. Public so a
-    * backfill driver (or a spec) can run it against explicit frames.
+  /** The per-batch kernel (run per micro-batch by
+    * [[VersionedStore.start]]); a backfill driver (or a spec) can run it
+    * against explicit frames.
     * `sigCol` must be a 64-bit signature (NULL rows dropped);
     * `blockCol`, when given, must be a non-negative long below 2⁴⁷. */
   def appendBatch(
@@ -86,23 +86,6 @@ object StreamingSimhashDedup {
     BandIndexStore.appendBatch(st, buckets, batchId, store, p.ranges,
       "BIGINT", (sig, psig) => bit_count(sig.bitwiseXOR(psig)) <= p.maxHamming)
   }
-
-  /** Wire a signature stream into continuous perceptual-dup
-    * annotation. */
-  def start(
-      stream: DataFrame,
-      idCol: String,
-      sigCol: String,
-      store: String,
-      checkpoint: String,
-      p: Params = Params(),
-      blockCol: Option[String] = None): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBatch(batch, batchId, idCol, sigCol, store, p, blockCol)
-      }
-      .start()
 
   /** Fold the history trees' `batch_id ≤ upto` directories into one
     * ([[BandIndexStore.compact]]). */

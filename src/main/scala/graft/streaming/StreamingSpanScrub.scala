@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.text.TextAnalysis
 
 /** Streaming exact-substring duplicate removal — the incremental tier
@@ -11,12 +10,10 @@ import graft.text.TextAnalysis
   *
   * State is the FIRST-OCCURRENCE WINDOW STORE: one row per distinct
   * length-`k` window hash ever seen, with the id of the document that
-  * introduced it. Like [[StreamingNovelty]]'s gram store it is
-  * SEGMENTED, not snapshotted — a window belongs to exactly ONE batch
-  * (the one that introduced it), batch n writes only its NEW window
-  * hashes under `v<n>`, readers union segments `< batchId`, and a
-  * replayed batch recomputes against the same predecessor segments
-  * and OVERWRITES its own (replay-idempotent).
+  * introduced it. Like [[StreamingNovelty]]'s gram store it is a
+  * [[VersionedStore]] SEGMENT store — a window belongs to exactly ONE
+  * batch (the one that introduced it), so batch n writes only its NEW
+  * window hashes under `v<n>`.
   *
   * Per batch every document is rewritten with the intervals cut whose
   * windows are either (a) already in the store — some earlier batch's
@@ -41,10 +38,11 @@ import graft.text.TextAnalysis
   */
 object StreamingSpanScrub {
 
-  /** The per-batch kernel `start` wires into foreachBatch: scrub the
-    * batch against segments < batchId, write rewritten docs to
-    * `outPath/v<batchId>` and the batch's NEW window hashes to
-    * `storePath/v<batchId>` (both overwrite — replay-idempotent).
+  /** The per-batch kernel: scrub the batch against the window segments
+    * below `batchId`, then write the rewritten docs under `outPath` and
+    * the batch's NEW window hashes under `storePath`
+    * ([[VersionedStore.writeSegment]] — both overwrite, so a replay
+    * reproduces them).
     * Contract: `idCol` must be LongType (enforced); output columns use
     * the canonical q142 names (`doc_id`, `kept_text`, ...). */
   def runBatch(
@@ -81,12 +79,14 @@ object StreamingSpanScrub {
     val removable = wpos.join(whState, Seq("wh"))
       .where(col("_seen") || col("id") =!= col("_bfirst"))
       .select(col("id"), col("pos"))
-    graft.dedup.Dedup.scrubByPositions(base, removable, "doc_id", k)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$outPath/v$batchId")
-    whState.where(!col("_seen"))
-      .select(col("wh"), col("_bfirst").as("first_id"))
-      .write.mode("overwrite").parquet(s"$storePath/v$batchId")
+    VersionedStore.writeSegment(
+      graft.dedup.Dedup.scrubByPositions(base, removable, "doc_id", k)
+        .coalesce(1),
+      outPath, batchId)
+    VersionedStore.writeSegment(
+      whState.where(!col("_seen"))
+        .select(col("wh"), col("_bfirst").as("first_id")),
+      storePath, batchId)
   }
 
   /** Union of first-occurrence window segments `< beforeVersion` —
@@ -94,46 +94,19 @@ object StreamingSpanScrub {
   def readStore(
       spark: SparkSession,
       storePath: String,
-      beforeVersion: Long = Long.MaxValue): DataFrame = {
-    val segs = segmentPaths(spark, storePath, beforeVersion)
-    if (segs.isEmpty) {
+      beforeVersion: Long = Long.MaxValue): DataFrame =
+    VersionedStore.segments(spark, storePath, beforeVersion).getOrElse {
       import spark.implicits._
       Seq.empty[(Long, Long)].toDF("wh", "first_id")
-    } else spark.read.parquet(segs: _*)
-  }
+    }
 
   /** All per-batch rewrites emitted so far (the accumulated q142
     * surface over every scrubbed document). */
-  def readScrubbed(spark: SparkSession, outPath: String): DataFrame = {
-    val segs = segmentPaths(spark, outPath, Long.MaxValue)
-    if (segs.isEmpty) {
+  def readScrubbed(spark: SparkSession, outPath: String): DataFrame =
+    VersionedStore.segments(spark, outPath).getOrElse {
       import spark.implicits._
       Seq.empty[(Long, String, Long, Long, Long)]
         .toDF("doc_id", "kept_text", "total_chars", "removed_chars",
           "removed_ppm")
-    } else spark.read.parquet(segs: _*)
-  }
-
-  private def segmentPaths(
-      spark: SparkSession,
-      storePath: String,
-      beforeVersion: Long): Seq[String] =
-    VersionPrune.versions(spark, storePath, beforeVersion)
-      .map(v => s"$storePath/v$v")
-
-  /** Wire a streaming document source into span-scrub maintenance. */
-  def start(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runBatch(batch, batchId, idCol, textCol, k, storePath, outPath)
-      }
-      .start()
+    }
 }

@@ -21,19 +21,29 @@ import org.apache.spark.sql.SparkSession
   * accepts, and a re-run converges.
   *
   * [[versions]] is the one `v<N>` listing every snapshot-store reader
-  * and the prune share.
+  * and the prune share; [[batchIdOf]] is the one parser of the batch id
+  * in a store entry's name, shared with [[StoreCompaction]].
   */
 object VersionPrune {
 
-  private val VersionDir = "v(0|[1-9][0-9]*)".r
+  private val CanonicalId = "0|[1-9][0-9]*"
+
+  /** The batch id in store entry `name` after `prefix` (`v` for snapshot
+    * versions, `batch_id=` for append-tree directories). Only the names
+    * writers produce count — the prefix plus a batch id's decimal
+    * digits, no sign or leading zero; anything else (`vtmp`,
+    * `batch_id=tmp`, a bare prefix) is None, never parsed. */
+  private[streaming] def batchIdOf(name: String, prefix: String): Option[Long] =
+    if (!name.startsWith(prefix)) None
+    else Some(name.drop(prefix.length)).filter(_.matches(CanonicalId))
+      .flatMap(_.toLongOption)
 
   /** The `v<N>` snapshot ids under `storePath` strictly below
     * `beforeVersion`, ascending — one `exists` and one `listStatus`.
-    * Only the names writers produce count (`v` + a batch id's decimal
-    * digits); a stray entry (`vtmp`, a bare `v`) is ignored, never
-    * parsed. Empty on a missing store. The filesystem is resolved from
-    * the store path, not the default FS — a store on a non-default
-    * scheme (s3a:// with a local default) would otherwise "not exist". */
+    * A stray entry ([[batchIdOf]] None) is ignored. Empty on a missing
+    * store. The filesystem is resolved from the store path, not the
+    * default FS — a store on a non-default scheme (s3a:// with a local
+    * default) would otherwise "not exist". */
   def versions(
       spark: SparkSession,
       storePath: String,
@@ -41,11 +51,8 @@ object VersionPrune {
     val base = new org.apache.hadoop.fs.Path(storePath)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq.map(_.getPath.getName)
-      .flatMap {
-        case VersionDir(n) => n.toLongOption
-        case _ => None
-      }
+    else fs.listStatus(base).toSeq
+      .flatMap(s => batchIdOf(s.getPath.getName, "v"))
       .filter(_ < beforeVersion)
       .sorted
   }

@@ -65,11 +65,6 @@ object TextAnalysis {
   def langScoreFrom(ct: Column, pattern: String): Column =
     size(regexp_extract_all(ct, lit(pattern), lit(0)))
 
-  /** Convenience single-expression form — see [[langScoreFrom]] for the
-    * plan-shape caveat. */
-  def langScore(text: Column, pattern: String): Column =
-    langScoreFrom(canonical(text), pattern)
-
   /** Heuristic language ID over a pre-materialized canonical-text
     * attribute: argmax of stopword scores; ties go to the earlier
     * language in `stopwordPatterns` order; "und" (undetermined) when

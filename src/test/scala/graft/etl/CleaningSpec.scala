@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions.monotonically_increasing_id
 
 /** Mirrors reference ingest_utils.py:83 `remove_one_day_changes`
   * behavior, including the next-day fan-out the reference exhibits when
@@ -44,5 +45,23 @@ class CleaningSpec extends SparkSpec {
     val out = Cleaning.removeOneDayChanges(df, "v", "nk", "d")
       .orderBy("d").collect().map(_.getString(2))
     assert(out.toSeq === Seq("A", "B"))
+  }
+
+  test("fillUnknown fills listed string and numeric nulls only") {
+    // reference: create_store_dim.py:33 fillna({...: 'unknown'/-1})
+    val df = Seq(
+      (Some(1L), Some("A"), Some("x")),
+      (None, None, None),
+      (Some(3L), None, Some("z"))
+    ).toDF("sk", "name", "other")
+      .withColumn("row", monotonically_increasing_id())
+    val out = Cleaning.fillUnknown(df, Seq("name"), Seq("sk"))
+      .orderBy("row").collect()
+      .map(r => (r.getAs[Long]("sk"), r.getAs[String]("name"),
+        Option(r.getAs[String]("other"))))
+    assert(out.toSeq === Seq(
+      (1L, "A", Some("x")),
+      (-1L, "unknown", None),  // unlisted column keeps its null
+      (3L, "unknown", Some("z"))))
   }
 }

@@ -3,6 +3,7 @@ package graft.sim
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import java.nio.file.Files
+import graft.streaming.VersionPrune
 
 /** The persisted kNN-edge-store tier: snapshots must serve exactly the
   * direct [[Ann.knnGraph]] answer, subgraph reads must equal direct
@@ -87,10 +88,10 @@ class KnnEdgeStoreSpec extends SparkSpec {
     assert(pinned.where($"query_id" === 600L).count() === 0)
     // retention: keep=2 is a no-op here; keep the pair then verify the
     // newest still serves after pruning
-    assert(KnnEdgeStore.prune(spark, store, keep = 2).isEmpty)
+    assert(VersionPrune.keepLatest(spark, store, keep = 2).isEmpty)
     KnnEdgeStore.buildVersion(grown, "vec_id", "embedding", dim = 4,
       k = 2, store = store, version = 3L, numTables = 4, numPlanes = 2)
-    assert(KnnEdgeStore.prune(spark, store, keep = 2) === Seq(1L))
+    assert(VersionPrune.keepLatest(spark, store, keep = 2) === Seq(1L))
     assert(rows(KnnEdgeStore.readLatest(spark, store)).nonEmpty)
   }
 

@@ -98,4 +98,17 @@ class StoreCompactionSpec extends SparkSpec {
       .mkString("\n")
     assert(pf.contains("cid"), s"cid pruning lost after compaction:\n$plan")
   }
+
+  test("a stray non-id batch directory is neither parsed, read nor deleted") {
+    val tree = Files.createTempDirectory("straytree").toString + "/t"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "x")
+      .write.parquet(s"$tree/batch_id=0")
+    Seq((3L, "c")).toDF("id", "x").write.parquet(s"$tree/batch_id=1")
+    new java.io.File(s"$tree/batch_id=tmp").mkdirs()
+    StoreCompaction.compactTree(spark, tree, upto = 1L, innerPartition = None)
+    assert(batchDirs(tree).sorted === Seq("batch_id=1", "batch_id=tmp"))
+    assert(spark.read.parquet(s"$tree/batch_id=1").orderBy("id")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq ===
+      Seq((1L, "a"), (2L, "b"), (3L, "c")))
+  }
 }

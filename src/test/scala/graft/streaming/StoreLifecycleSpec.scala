@@ -112,7 +112,7 @@ class StoreLifecycleSpec extends SparkSpec {
     StreamingHeavyHitters.runBatch(docs(1), 0L, "text", cap, store)
     StreamingHeavyHitters.runBatch(docs(2), 1L, "text", cap, store)
     StreamingHeavyHitters.runBatch(docs(3), 2L, "text", cap, store)
-    assert(StreamingHeavyHitters.prune(spark, store, keep = 2) === Seq(0L))
+    assert(VersionPrune.keepLatest(spark, store, keep = 2) === Seq(0L))
     // crash-replay batch 2 against the pruned store (rebuilds from v1,
     // exactly the keep=2 floor), then batch 3
     StreamingHeavyHitters.runBatch(docs(3), 2L, "text", cap, store)

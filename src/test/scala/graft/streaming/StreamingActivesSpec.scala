@@ -33,7 +33,8 @@ class StreamingActivesSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("activckpt").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ping]
-    val q = StreamingActives.start(input.toDF(), "user_id", "day", store, ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingActives.runBatch(_, _, "user_id", "day", store))
     for (b <- pings.grouped(150)) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
     assert(seriesRows(store, 7) === oneShot(pings, 7))
@@ -72,7 +73,7 @@ class StreamingActivesSpec extends SparkSpec {
     for ((b, i) <- pings.grouped(100).zipWithIndex)
       StreamingActives.runBatch(b.toDF(), i.toLong, "user_id", "day", store)
     val before = seriesRows(store, 7)
-    val pruned = StreamingActives.prune(spark, store, keep = 2)
+    val pruned = VersionPrune.keepLatest(spark, store, keep = 2)
     assert(pruned.nonEmpty)
     assert(seriesRows(store, 7) === before)
     // and maintenance continues cleanly on the pruned store

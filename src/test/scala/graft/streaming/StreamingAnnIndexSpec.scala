@@ -49,8 +49,8 @@ class StreamingAnnIndexSpec extends SparkSpec {
       shuffled.slice(120, 200))
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Vec]
-    val q = StreamingAnnIndex.start(input.toDF(), quantizer,
-      "vec_id", "embedding", sliced, ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingAnnIndex.appendBatch(_, _, quantizer, "vec_id", "embedding", sliced))
     for (b <- slices) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
 

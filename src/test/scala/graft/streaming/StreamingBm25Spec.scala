@@ -26,7 +26,8 @@ class StreamingBm25Spec extends SparkSpec {
     val ckpt = Files.createTempDirectory("bmckpt").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Bm25Doc]
-    val q = StreamingBm25.start(input.toDF(), "doc_id", "text", store, ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingBm25.runBatch(_, _, "doc_id", "text", store))
     for (b <- slices) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
   }

@@ -33,8 +33,8 @@ class StreamingCdcSpec extends SparkSpec {
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Change]
-    val q = StreamingCdc.start(input.toDF(), "k", "ts", "seq", "op",
-      store, ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingCdc.runBatch(_, _, "k", "ts", "seq", "op", store))
     for (b <- batches) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
 
@@ -62,8 +62,8 @@ class StreamingCdcSpec extends SparkSpec {
     val slices = rnd.shuffle(log).grouped(9).toSeq
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Change]
-    val q = StreamingCdc.start(input.toDF(), "k", "ts", "seq", "op",
-      store, ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingCdc.runBatch(_, _, "k", "ts", "seq", "op", store))
     for (b <- slices) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
     val oneShot = Cdc.applyLog(

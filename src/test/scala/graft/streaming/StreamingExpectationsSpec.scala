@@ -23,8 +23,8 @@ class StreamingExpectationsSpec extends SparkSpec {
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Reading]
-    val q = StreamingExpectations.start(input.toDF(), constraints,
-      metrics, ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingExpectations.runBatch(_, _, constraints, metrics))
     for (b <- batches) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
 
@@ -65,8 +65,8 @@ class StreamingExpectationsSpec extends SparkSpec {
       shuffled.slice(17, 40))
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Reading]
-    val q = StreamingExpectations.start(input.toDF(), constraints,
-      sliced, ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingExpectations.runBatch(_, _, constraints, sliced))
     for (b <- slices) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
     assert(totals(spark.read.parquet(sliced)).toSeq === want.toSeq)

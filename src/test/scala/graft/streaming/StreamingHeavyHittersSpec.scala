@@ -93,7 +93,8 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("hhckpt").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[HhDoc]
-    val q = StreamingHeavyHitters.start(input.toDF(), "text", Cap, store, ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingHeavyHitters.runBatch(_, _, "text", Cap, store))
     docs.grouped(15).foreach { b => input.addData(b: _*); q.processAllAvailable() }
     q.stop()
     val s = StreamingHeavyHitters.readLatestSummary(spark, store)

@@ -28,8 +28,8 @@ class StreamingImportanceSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("impckpt").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[ImpDoc]
-    val q = StreamingImportance.start(
-      input.toDF(), "doc_id", "text", target, B, store, ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingImportance.runBatch(_, _, "doc_id", "text", target, B, store))
     for (b <- slices) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
   }
@@ -81,7 +81,7 @@ class StreamingImportanceSpec extends SparkSpec {
     val store = Files.createTempDirectory("impprune").toString
     foldBatches(Seq(corpus.take(10), corpus.slice(10, 50), corpus.drop(50)), store)
     val before = scored(store)
-    val removed = StreamingImportance.prune(spark, store, keep = 2)
+    val removed = VersionPrune.keepLatest(spark, store, keep = 2)
     assert(removed.nonEmpty)
     assert(scored(store) === before)
   }

@@ -31,8 +31,9 @@ class StreamingKmvSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("kmvckpt").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[KmvDoc]
-    val q = StreamingKmv.start(input.toDF(), "source", "doc_id", "text",
-      gramN = 3, k = K, storePath = store, checkpoint = ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingKmv.runBatch(_, _, "source", "doc_id", "text",
+        gramN = 3, k = K, storePath = store))
     for (b <- slices) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
   }
@@ -86,7 +87,7 @@ class StreamingKmvSpec extends SparkSpec {
     assert(StreamingKmv.overlapFromStore(spark, store, K)
       .orderBy("src_a", "src_b").collect().map(_.toSeq) === served,
       "replay changed the served answer")
-    StreamingKmv.prune(spark, store, keep = 2)
+    VersionPrune.keepLatest(spark, store, keep = 2)
     assert(StreamingKmv.overlapFromStore(spark, store, K)
       .orderBy("src_a", "src_b").collect().map(_.toSeq) === served,
       "prune changed the served answer")

@@ -30,9 +30,10 @@ class StreamingKnnEdgesSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("skeck").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Vec]
-    val q = StreamingKnnEdges.start(input.toDF(), "vec_id", "embedding",
-      store, ckpt, dim = 4, k = 3, refreshEvery = 1, numTables = 4,
-      numPlanes = 2)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingKnnEdges.runBatch(_, _, "vec_id", "embedding",
+        store, dim = 4, k = 3, refreshEvery = 1, numTables = 4,
+        numPlanes = 2))
     for (b <- Seq(b0, b1, b2)) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
     val direct = Ann.knnGraph((b0 ++ b1 ++ b2).toDF(), "vec_id",
@@ -72,7 +73,7 @@ class StreamingKnnEdgesSpec extends SparkSpec {
     StreamingKnnEdges.appendVectors(b2.toDF(), 2L, "vec_id", "embedding", store)
     StreamingKnnEdges.refresh(spark, store, 2L, dim = 4, k = 3,
       numTables = 4, numPlanes = 2)
-    assert(StreamingKnnEdges.prune(spark, store, keep = 2) === Seq(0L))
+    assert(VersionPrune.keepLatest(spark, s"$store/edges", keep = 2) === Seq(0L))
   }
 
   test("lifecycle compose: compaction + prune + crash-replay leave served " +
@@ -98,7 +99,7 @@ class StreamingKnnEdgesSpec extends SparkSpec {
     StreamingKnnEdges.refresh(spark, store, 1L, dim = 4, k = 3,
       numTables = 4, numPlanes = 2)
     StreamingKnnEdges.compactVectors(spark, store, upto = 1L)
-    StreamingKnnEdges.prune(spark, store, keep = 2)
+    VersionPrune.keepLatest(spark, s"$store/edges", keep = 2)
     // crash-replay: batch 2 appends, dies, replays, then refreshes
     StreamingKnnEdges.appendVectors(b2.toDF(), 2L, "vec_id", "embedding", store)
     StreamingKnnEdges.appendVectors(b2.toDF(), 2L, "vec_id", "embedding", store)

@@ -28,7 +28,8 @@ class StreamingLmSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("lmckpt").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[LmDoc]
-    val q = StreamingLm.start(input.toDF(), "doc_id", "text", B, store, ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingLm.runBatch(_, _, "doc_id", "text", B, store))
     for (b <- slices) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
   }

@@ -35,8 +35,8 @@ class StreamingNearDedupSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("neardedupck").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[NdDoc]
-    val q = StreamingNearDedup.start(input.toDF(), "doc_id", "text",
-      store, ckpt, p)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingNearDedup.appendBatch(_, _, "doc_id", "text", store, p))
     for (b <- slices if b.nonEmpty) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
     val v = StreamingNearDedup.verdicts(spark, store)

@@ -31,9 +31,9 @@ class StreamingNoveltySpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("novckpt").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[NovDoc]
-    val q = StreamingNovelty.start(input.toDF(), "doc_id", "text",
-      n = 3, keepFloorPpm = 500000L, storePath = store, outPath = out,
-      checkpoint = ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingNovelty.runBatch(_, _, "doc_id", "text",
+        n = 3, keepFloorPpm = 500000L, storePath = store, outPath = out))
     for (b <- slices) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
     (store, out)

@@ -32,7 +32,8 @@ class StreamingRollupSpec extends SparkSpec {
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Sale]
-    val q = StreamingRollup.start(input.toDF(), keys, measures, store, ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingRollup.runBatch(_, _, keys, measures, store))
     for (b <- batches) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
 
@@ -58,7 +59,8 @@ class StreamingRollupSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("rollupshufck").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Sale]
-    val q = StreamingRollup.start(input.toDF(), keys, measures, store, ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingRollup.runBatch(_, _, keys, measures, store))
     for (b <- slices if b.nonEmpty) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
     val want = IncrementalAgg.rollup(rows.toDF(), keys, measures)

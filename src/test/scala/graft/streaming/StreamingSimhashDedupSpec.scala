@@ -43,8 +43,8 @@ class StreamingSimhashDedupSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("shdedupck").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[ShDoc]
-    val q = StreamingSimhashDedup.start(input.toDF(), "doc_id", "sig",
-      store, ckpt, p)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingSimhashDedup.appendBatch(_, _, "doc_id", "sig", store, p))
     for (b <- slices if b.nonEmpty) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
     StreamingSimhashDedup.verdicts(spark, store)

@@ -37,8 +37,9 @@ class StreamingSpanScrubSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("scrubckpt").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[ScrubDoc]
-    val q = StreamingSpanScrub.start(input.toDF(), "doc_id", "text",
-      k = K, storePath = store, outPath = out, checkpoint = ckpt)
+    val q = VersionedStore.start(input.toDF(), ckpt)(
+      StreamingSpanScrub.runBatch(_, _, "doc_id", "text",
+        k = K, storePath = store, outPath = out))
     for (b <- slices) { input.addData(b: _*); q.processAllAvailable() }
     q.stop()
     (store, out)

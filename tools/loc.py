@@ -1,13 +1,15 @@
 #!/usr/bin/env python3
 """Count Scala code lines under src/main and src/test at two git revisions.
 
-Usage: python3 tools/loc.py BASE [HEAD]
+Usage: python3 tools/loc.py BASE [HEAD] [-- PATH...]
 
 A line counts when it is neither blank nor comment: lines whose text
 starts with `//` and lines inside `/* ... */` blocks (Scaladoc
 included) do not count; a line with code before or after a block
 comment does. Files are read with `git ls-tree` / `git show`, so
-neither revision is checked out. HEAD defaults to `HEAD`.
+neither revision is checked out. HEAD defaults to `HEAD`. Paths after
+`--` replace the default roots, one output row each (e.g.
+`-- src/main/scala/graft/streaming`).
 """
 import subprocess
 import sys
@@ -56,14 +58,19 @@ def count(rev, root):
 
 
 def main(argv):
-    if len(argv) not in (2, 3):
+    revs, roots = argv[1:], ROOTS
+    if "--" in revs:
+        i = revs.index("--")
+        revs, roots = revs[:i], tuple(revs[i + 1:])
+    if len(revs) not in (1, 2) or not roots:
         sys.exit(__doc__.strip().splitlines()[2])
-    base = argv[1]
-    head = argv[2] if len(argv) == 3 else "HEAD"
-    print(f"{'':10}{base[:12]:>14}{head[:12]:>14}{'delta':>10}")
-    for root in ROOTS:
+    base = revs[0]
+    head = revs[1] if len(revs) == 2 else "HEAD"
+    width = max(10, max(len(r) for r in roots) + 2)
+    print(f"{'':{width}}{base[:12]:>14}{head[:12]:>14}{'delta':>10}")
+    for root in roots:
         b, h = count(base, root), count(head, root)
-        print(f"{root:10}{b:>14,}{h:>14,}{h - b:>+10,}")
+        print(f"{root:{width}}{b:>14,}{h:>14,}{h - b:>+10,}")
 
 
 if __name__ == "__main__":
