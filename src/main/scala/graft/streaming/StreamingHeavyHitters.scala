@@ -96,12 +96,9 @@ object StreamingHeavyHitters {
     }
   }
 
-  def readLatestSummary(
-      spark: SparkSession,
-      storePath: String,
-      beforeVersion: Long = Long.MaxValue): MgSummary =
+  def readLatestSummary(spark: SparkSession, storePath: String): MgSummary =
     summaryOf(IncrementalPipeline.readLatestDim(
-      spark, storePath, emptySummaryDf(spark), beforeVersion))
+      spark, storePath, emptySummaryDf(spark)))
 
   private def emptySummaryDf(spark: SparkSession): DataFrame = {
     import spark.implicits._

@@ -45,12 +45,8 @@ object StreamingKmv {
   }
 
   /** The latest stored sketch as (grp, h) rows — ≤ |sources| · k. */
-  def readLatestSketch(
-      spark: SparkSession,
-      storePath: String,
-      beforeVersion: Long = Long.MaxValue): DataFrame =
-    IncrementalPipeline.readLatestDim(
-      spark, storePath, emptySketchDf(spark), beforeVersion)
+  def readLatestSketch(spark: SparkSession, storePath: String): DataFrame =
+    IncrementalPipeline.readLatestDim(spark, storePath, emptySketchDf(spark))
 
   private def emptySketchDf(spark: SparkSession): DataFrame = {
     import spark.implicits._
