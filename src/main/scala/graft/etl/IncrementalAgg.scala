@@ -34,21 +34,24 @@ object IncrementalAgg {
     fact.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Fold a raw delta batch into an existing snapshot: the delta is
-    * pre-aggregated to its own per-key partials (map-side combined —
-    * only |delta keys| rows shuffle), then partials and snapshot rows
-    * re-aggregate on the same keys. Keys present only in the delta
-    * appear; keys untouched by the delta pass through with their
+  /** Fold a raw delta batch into an existing snapshot in ONE
+    * aggregate: each delta row enters as a unit partial (`n_rows` = 1,
+    * each measure = its expression) beside the snapshot rows, and the
+    * union aggregates once on the keys: the merge plans one exchange,
+    * and Spark's partial aggregation still collapses the delta map-side
+    * before it, so only per-key partials shuffle. Keys present only in the
+    * delta appear; keys untouched by the delta pass through with their
     * snapshot values (sum over a single row). */
   def mergeRollup(
       snapshot: DataFrame,
       deltaFact: DataFrame,
       keys: Seq[String],
       measures: Seq[(String, Column)]): DataFrame = {
-    val partial = rollup(deltaFact, keys, measures)
+    val units = deltaFact.select(keys.map(col) ++ (lit(1L).as("n_rows") +:
+      measures.map { case (n, c) => c.as(n) }): _*)
     val merges = sum(col("n_rows")).as("n_rows") +:
       measures.map { case (n, _) => sum(col(n)).as(n) }
-    val merged = snapshot.unionByName(partial)
+    val merged = snapshot.unionByName(units)
       .groupBy(keys.map(col): _*)
       .agg(merges.head, merges.tail: _*)
     // pin the output to the single-rollup schema: sum() re-widens
@@ -56,7 +59,7 @@ object IncrementalAgg {
     // precision until it hits the 38 cap — a snapshot store would drift
     // schema version over version. Callers size the measure decimal for
     // the GRAND total, as with any materialized aggregate.
-    merged.select(partial.schema.fields
+    merged.select(rollup(deltaFact, keys, measures).schema.fields
       .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
   }
 }

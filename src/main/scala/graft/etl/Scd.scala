@@ -99,6 +99,12 @@ object Scd {
     * Unlike the reference's `load_update_entries` (scd.py:203), which
     * collects update rows to the driver and issues per-row UPDATEs, both
     * outputs stay distributed DataFrames for MERGE-style sinks.
+    *
+    * Periods match with `===`, the SQL `=` of q13's oracle, so a period
+    * with a NULL attribute never matches itself: it is returned in
+    * `toInsert` again by every call. The streaming merge
+    * ([[graft.streaming.IncrementalPipeline.processBatch]]) groups NULLs
+    * as equal instead and carries such a period over unchanged.
     */
   def scdUpsert(
       oldScd: DataFrame,

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.etl.Scd
 
 /** Incremental SCD maintenance as a Structured Streaming pipeline.
   *
@@ -14,52 +14,73 @@ import graft.etl.Scd
   * branch into download → dedup → SCD update/insert). The Spark-native
   * analog needs no scheduler: a file-source stream discovers new files,
   * an event-time watermark bounds dedup state, and each micro-batch applies
-  * the same SCD upsert the batch path uses — one code path for initial
-  * load and every increment.
+  * the batch path's SCD upsert as one merge ([[processBatch]]) — one code
+  * path for initial load and every increment.
   *
-  * Plan shape at scale: each micro-batch shuffles only the batch (keyed
-  * by natural key); the dim store is re-read per batch and joined on the
-  * same key. Dedup state is bounded by the watermark delay, not by
-  * history. The dim store is a [[VersionedStore]] snapshot store, which
+  * Plan shape at scale: each micro-batch shuffles snapshot ∪ batch
+  * once, by natural key, and rebuilds every period inside that
+  * partitioning (see [[processBatch]]); the dim store is re-read per
+  * batch, so that one shuffle carries the whole snapshot. Dedup state
+  * is bounded by the watermark delay, not by history. The dim store is a [[VersionedStore]] snapshot store, which
   * makes a replayed batch id reproduce its snapshot.
   */
 object IncrementalPipeline {
 
-  /** Merge an scdUpsert result into a dim snapshot: periods being
-    * updated are replaced (matched on natural key + start_date), new
-    * periods appended — MERGE semantics for sinks without native MERGE. */
-  def applyUpsert(
-      oldScd: DataFrame,
-      toUpdate: DataFrame,
-      toInsert: DataFrame,
-      naturalKey: String,
-      attrs: Seq[String] = Seq.empty): DataFrame = {
-    // period identity = (key, attrs, start_date); see Scd.scdUpsert
-    val keyCols = (naturalKey +: attrs) :+ "start_date"
-    val updatedKeys = toUpdate.select(
-      keyCols.zipWithIndex.map { case (c, i) => col(c).as(s"_u$i") }: _*)
-    val untouched = oldScd.join(
-      updatedKeys,
-      keyCols.zipWithIndex.map { case (c, i) => oldScd(c) === col(s"_u$i") }
-        .reduce(_ && _),
-      "left_anti")
-    untouched
-      .unionByName(toUpdate.select(oldScd.columns.map(col): _*))
-      .unionByName(toInsert.select(oldScd.columns.map(col): _*))
-  }
-
-  /** The merge kernel: rebuild-and-split against the current dim,
-    * then merge. Pure DataFrame in/out so it is unit-testable without a
-    * streaming context. */
+  /** The merge kernel: rebuild the periods of (old snapshot replayed as
+    * records) ∪ (batch records) and merge them into the snapshot — the
+    * value of [[graft.etl.Scd.scdUpsert]]'s `toUpdate`/`toInsert`
+    * applied as a MERGE (update the periods matched on natural key +
+    * attrs + start_date, append the rest), planned on ONE shuffle.
+    *
+    * Old rows and batch records are tagged, hash-partitioned once by the
+    * natural key, then grouped on (nk, attrs): hash(nk) already clusters
+    * that grouping, the `lead` window on nk and the per-period decision,
+    * so nothing reshuffles. Per (nk, attrs) the rebuilt period starts at
+    * `s*` = min(old starts ∪ new dates) and ends at `lead(s*)` over nk,
+    * ordered by (s*, attrs). Every old row passes through unchanged,
+    * except the one starting at `s*` when it is current and the rebuilt
+    * period has closed: the rebuilt row replaces it. The rebuilt row is
+    * also appended when no old row starts at `s*` (a new period, or a
+    * late record moving a period's start earlier — the later old row
+    * stays, as in the reference's update-current-only MERGE).
+    *
+    * Grouping treats NULL attributes as equal (the reference's attribute
+    * hash does too), so a NULL-attribute period is carried over, not
+    * re-inserted by every batch as an `===` match would. Old periods are
+    * unique on (nk, attrs, start_date), which every snapshot this kernel
+    * writes keeps. Pure DataFrame in/out so it is unit-testable without
+    * a streaming context. */
   def processBatch(
       oldScd: DataFrame,
       batch: DataFrame,
       naturalKey: String,
       attrs: Seq[String],
       dateCol: String): DataFrame = {
-    val (toUpdate, toInsert) =
-      Scd.scdUpsert(oldScd, batch, naturalKey, attrs, dateCol)
-    applyUpsert(oldScd, toUpdate, toInsert, naturalKey, attrs)
+    val keys = (naturalKey +: attrs).map(col)
+    val old = oldScd.select(keys :+ col("start_date") :+
+      struct(col("start_date"), col("end_date"), col("is_current")).as("_old"): _*)
+    val recs = batch.select(keys :+ col(dateCol).as("start_date") :+
+      lit(null).cast(old.schema("_old").dataType).as("_old"): _*)
+    val byKey = Window.partitionBy(col(naturalKey))
+      .orderBy(col("start_date") +: attrs.map(col): _*)
+    val periods = old.unionByName(recs)
+      .repartition(col(naturalKey))
+      .groupBy(keys: _*)
+      .agg(min(col("start_date")).as("start_date"),
+        collect_list(col("_old")).as("_olds"))
+      .withColumn("end_date", lead(col("start_date"), 1).over(byKey))
+    val atStart = (o: Column) => o("start_date") <=> col("start_date")
+    val replace = exists(col("_olds"), o => atStart(o) && o("is_current")) &&
+      col("end_date").isNotNull
+    val kept = filter(col("_olds"), o => !(replace && atStart(o)))
+    val rebuilt = struct(col("start_date"), col("end_date"),
+      col("end_date").isNull.as("is_current"))
+    periods
+      .select(keys :+ explode(
+        when(replace || !exists(col("_olds"), atStart), concat(kept, array(rebuilt)))
+          .otherwise(kept)).as("_p"): _*)
+      .select(keys :+ col("_p.*"): _*)
+      .select(oldScd.columns.map(col): _*)
   }
 
   /** Latest dim snapshot from a versioned store (empty-schema dim when

@@ -1,8 +1,12 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.etl.Scd
+import graft.etl.{IncrementalAgg, Scd}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 import java.nio.file.Files
 
 case class Rec(nk: Long, name: String, ts: java.sql.Timestamp, d: java.sql.Date)
@@ -10,7 +14,7 @@ case class Rec(nk: Long, name: String, ts: java.sql.Timestamp, d: java.sql.Date)
 /** Proves one incremental micro-batch updates an SCD dim correctly —
   * the Spark-native analog of the reference DAG's watermark-branch +
   * update path (dags/main_pipeline.py:93-156). */
-class IncrementalPipelineSpec extends SparkSpec {
+class IncrementalPipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s + " 00:00:00")
@@ -60,6 +64,51 @@ class IncrementalPipelineSpec extends SparkSpec {
       .where($"nk" === 1).orderBy("start_date").collect()
       .map(r => (r.getAs[String]("name"), r.getAs[Boolean]("is_current")))
     assert(k1.toSeq === Seq(("A", false), ("B", true)))
+  }
+
+  test("a NULL-attribute period is carried over, not re-inserted per batch") {
+    val store = Files.createTempDirectory("nullattrstore").toString
+    val batches = Seq(
+      Seq((1L, null: String, d("2024-01-01")), (2L, "X", d("2024-01-02"))),
+      Seq((2L, "Y", d("2024-01-05"))),
+      Seq((2L, "Z", d("2024-01-09"))))
+    for ((b, id) <- batches.zipWithIndex)
+      IncrementalPipeline.runBatch(b.toDF("nk", "name", "d"), id.toLong,
+        "nk", Seq("name"), "d", store)
+    val rows = IncrementalPipeline.readLatestDim(spark, store,
+        sys.error("store must exist"))
+      .orderBy("nk", "start_date").collect()
+      .map(r => (r.getAs[Long]("nk"), Option(r.getAs[String]("name")),
+        r.getAs[java.sql.Date]("start_date").toString,
+        r.getAs[Boolean]("is_current")))
+    assert(rows.toSeq === Seq(
+      (1L, None, "2024-01-01", true),
+      (2L, Some("X"), "2024-01-02", false),
+      (2L, Some("Y"), "2024-01-05", false),
+      (2L, Some("Z"), "2024-01-09", true)))
+  }
+
+  test("processBatch and mergeRollup each plan exactly one shuffle exchange") {
+    def shuffles(df: DataFrame): Int = {
+      df.collect() // run it, so adaptive execution settles its final plan
+      collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeLike => e
+      }.size
+    }
+    val oldScd = Seq((1L, "A", d("2024-01-01"), null: java.sql.Date, true),
+        (2L, "X", d("2024-01-02"), null: java.sql.Date, true))
+      .toDF("nk", "name", "start_date", "end_date", "is_current")
+    val batch = Seq((1L, "B", d("2024-01-05")), (3L, "Q", d("2024-01-03")))
+      .toDF("nk", "name", "d")
+    val merged = IncrementalPipeline.processBatch(oldScd, batch, "nk", Seq("name"), "d")
+    assert(shuffles(merged) === 1, merged.queryExecution.executedPlan)
+
+    val measures = Seq("amt" -> col("v").cast("decimal(12,2)"))
+    val snap = Seq(("a", 2L, BigDecimal("3.00"))).toDF("k", "n_rows", "amt")
+      .select(col("k"), col("n_rows"), col("amt").cast("decimal(22,2)"))
+    val delta = Seq(("a", 1.0), ("b", 2.0)).toDF("k", "v")
+    val rolled = IncrementalAgg.mergeRollup(snap, delta, Seq("k"), measures)
+    assert(shuffles(rolled) === 1, rolled.queryExecution.executedPlan)
   }
 
   test("streaming end-to-end: two micro-batches maintain the dim store") {

@@ -202,4 +202,5 @@ def main():
     print(f"\n{len(results) - n_bad}/{len(results)} green")
     sys.exit(0 if n_bad == 0 else 1)
 
-main()
+if __name__ == "__main__":
+    main()
