@@ -37,11 +37,11 @@ object IncrementalAgg {
   /** Fold a raw delta batch into an existing snapshot in ONE
     * aggregate: each delta row enters as a unit partial (`n_rows` = 1,
     * each measure = its expression) beside the snapshot rows, and the
-    * union aggregates once on the keys: the merge plans one exchange,
-    * and Spark's partial aggregation still collapses the delta map-side
-    * before it, so only per-key partials shuffle. Keys present only in the
-    * delta appear; keys untouched by the delta pass through with their
-    * snapshot values (sum over a single row). */
+    * union aggregates once on the keys. The merge thus plans one
+    * exchange, and Spark's partial aggregation still collapses the delta
+    * map-side before it, so only per-key partials shuffle. Keys present
+    * only in the delta appear; keys untouched by the delta pass through
+    * with their snapshot values (sum over a single row). */
   def mergeRollup(
       snapshot: DataFrame,
       deltaFact: DataFrame,

@@ -21,8 +21,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * once, by natural key, and rebuilds every period inside that
   * partitioning (see [[processBatch]]); the dim store is re-read per
   * batch, so that one shuffle carries the whole snapshot. Dedup state
-  * is bounded by the watermark delay, not by history. The dim store is a [[VersionedStore]] snapshot store, which
-  * makes a replayed batch id reproduce its snapshot.
+  * is bounded by the watermark delay, not by history. The dim store is
+  * a [[VersionedStore]] snapshot store, which makes a replayed batch id
+  * reproduce its snapshot.
   */
 object IncrementalPipeline {
 
@@ -57,8 +58,8 @@ object IncrementalPipeline {
       attrs: Seq[String],
       dateCol: String): DataFrame = {
     val keys = (naturalKey +: attrs).map(col)
-    val old = oldScd.select(keys :+ col("start_date") :+
-      struct(col("start_date"), col("end_date"), col("is_current")).as("_old"): _*)
+    val period = struct(col("start_date"), col("end_date"), col("is_current"))
+    val old = oldScd.select(keys :+ col("start_date") :+ period.as("_old"): _*)
     val recs = batch.select(keys :+ col(dateCol).as("start_date") :+
       lit(null).cast(old.schema("_old").dataType).as("_old"): _*)
     val byKey = Window.partitionBy(col(naturalKey))
@@ -75,10 +76,10 @@ object IncrementalPipeline {
     val kept = filter(col("_olds"), o => !(replace && atStart(o)))
     val rebuilt = struct(col("start_date"), col("end_date"),
       col("end_date").isNull.as("is_current"))
+    val emitRebuilt = replace || !exists(col("_olds"), atStart)
     periods
-      .select(keys :+ explode(
-        when(replace || !exists(col("_olds"), atStart), concat(kept, array(rebuilt)))
-          .otherwise(kept)).as("_p"): _*)
+      .select(keys :+ explode(when(emitRebuilt, concat(kept, array(rebuilt)))
+        .otherwise(kept)).as("_p"): _*)
       .select(keys :+ col("_p.*"): _*)
       .select(oldScd.columns.map(col): _*)
   }

@@ -100,7 +100,8 @@ class IncrementalPipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .toDF("nk", "name", "start_date", "end_date", "is_current")
     val batch = Seq((1L, "B", d("2024-01-05")), (3L, "Q", d("2024-01-03")))
       .toDF("nk", "name", "d")
-    val merged = IncrementalPipeline.processBatch(oldScd, batch, "nk", Seq("name"), "d")
+    val merged =
+      IncrementalPipeline.processBatch(oldScd, batch, "nk", Seq("name"), "d")
     assert(shuffles(merged) === 1, merged.queryExecution.executedPlan)
 
     val measures = Seq("amt" -> col("v").cast("decimal(12,2)"))
