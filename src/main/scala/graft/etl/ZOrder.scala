@@ -128,11 +128,12 @@ object ZOrder {
 
   /** Min/max-skipping scan over a [[writeLayout]] directory: consult
     * the bounding boxes, read ONLY the surviving `file_id=` partitions
-    * (the isin lands in the scan's PartitionFilters — directories the
-    * boxes prune are never listed, opened, or read), then apply the
-    * residual row predicate. This is the measured form of the skipping
-    * story: [[ZOrderSpec]] asserts the scan's `numFiles` metric reads
-    * strictly fewer files than the layout holds for a selective box.
+    * (the isin lands in the scan's PartitionFilters — the scan never
+    * reads a directory the boxes prune; the schema is one footer),
+    * then apply the residual row predicate. This is the measured form
+    * of the skipping story: [[ZOrderSpec]] asserts the scan's
+    * `numFiles` metric reads strictly fewer files than the layout
+    * holds for a selective box.
     * The predicate box must lie inside the z-domain `[0, 2^bits)` —
     * out-of-domain rows live in the null partition, which an
     * in-domain box correctly never matches. */
@@ -144,7 +145,7 @@ object ZOrder {
       yCol: String,
       xLo: Long, xHi: Long, yLo: Long, yHi: Long): DataFrame = {
     val keep = overlappingFiles(stats, xLo, xHi, yLo, yHi)
-    spark.read.parquet(path)
+    graft.sources.Parquet.read(spark, path)
       .where(col("file_id").isin(keep: _*))
       .where(col(xCol).between(xLo, xHi) && col(yCol).between(yLo, yHi))
   }

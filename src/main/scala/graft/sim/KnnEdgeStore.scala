@@ -64,6 +64,6 @@ object KnnEdgeStore {
       graft.streaming.VersionPrune.versions(spark, store, beforeVersion)
     require(versions.nonEmpty,
       s"no committed edge snapshot below version $beforeVersion at $store")
-    spark.read.parquet(s"$store/v${versions.last}")
+    graft.sources.Parquet.read(spark, s"$store/v${versions.last}")
   }
 }

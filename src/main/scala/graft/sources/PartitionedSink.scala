@@ -23,5 +23,5 @@ object PartitionedSink {
       .parquet(path)
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
 }

@@ -11,7 +11,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * read — is standard load hygiene (same family as
   * [[graft.etl.Expectations]], which audits the VALUES).
   *
-  * Pure metadata work: the parquet footer read touches no data.
+  * Pure metadata work: the schema is [[Parquet.read]]'s — one footer
+  * read on the driver plus Spark's partition discovery, so partition
+  * columns and Spark's read-side nullability count — and no Spark job
+  * runs.
   */
 object SchemaAudit {
 
@@ -55,7 +58,7 @@ object SchemaAudit {
       spark: SparkSession,
       path: String,
       expected: StructType): Seq[Drift] =
-    diff(expected, spark.read.parquet(path).schema)
+    diff(expected, Parquet.read(spark, path).schema)
 
   /** Gate form: throw with the full drift report unless the source
     * matches the contract. */

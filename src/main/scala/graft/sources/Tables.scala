@@ -5,15 +5,20 @@ import org.apache.spark.sql.functions._
 
 /** Table loaders for the driver's parquet test tables.
   *
-  * The test tables arrive already typed, so loaders are direct parquet
-  * reads (distributed, prunable, pushdown-friendly) — except `events`,
-  * whose nano timestamps need enforcement. The reference's stringly→typed
-  * ingest coercions (ingest_utils.py:12 `download_data_from_bq`) live in
-  * [[TypedIngest]], as column operators rather than driver-side pandas.
+  * The test tables arrive already typed, so loaders are plain parquet
+  * scans (distributed, prunable, pushdown-friendly) through
+  * [[Parquet.read]]: the schema comes from the table's one footer, read
+  * on the driver, so building a loader's DataFrame submits no Spark
+  * job; a missing table, a glob or a directory without a data file
+  * falls back to `spark.read.parquet` and its own schema inference and
+  * errors. `events` is the exception: its nano timestamps need
+  * enforcement. The reference's stringly→typed ingest coercions
+  * (ingest_utils.py:12 `download_data_from_bq`) live in [[TypedIngest]],
+  * as column operators rather than driver-side pandas.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   /** CSV source with an explicit schema — never schema inference, which
     * at 100 TB is a full extra pass over the data. Malformed fields

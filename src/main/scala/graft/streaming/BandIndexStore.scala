@@ -60,7 +60,7 @@ private[streaming] object BandIndexStore {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     } catch { case _: Exception => false }
     if (exists)
-      spark.read.option("basePath", path).parquet(path)
+      graft.sources.Parquet.readTree(spark, path)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         StructType.fromDDL(schema))
@@ -149,7 +149,6 @@ private[streaming] object BandIndexStore {
 
   /** All verdicts so far: (batch_id, id, is_dup, dup_of). */
   def verdicts(spark: SparkSession, store: String): DataFrame =
-    spark.read.option("basePath", s"$store/verdicts")
-      .parquet(s"$store/verdicts")
+    graft.sources.Parquet.readTree(spark, s"$store/verdicts")
       .select(col("batch_id"), col("id"), col("is_dup"), col("dup_of"))
 }

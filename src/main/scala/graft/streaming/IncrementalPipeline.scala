@@ -98,7 +98,7 @@ object IncrementalPipeline {
       beforeVersion: Long = Long.MaxValue): DataFrame = {
     val versions = VersionPrune.versions(spark, storePath, beforeVersion)
     if (versions.isEmpty) emptyLike
-    else spark.read.parquet(s"$storePath/v${versions.last}")
+    else graft.sources.Parquet.read(spark, s"$storePath/v${versions.last}")
   }
 
   /** The complete per-batch kernel: rebuild-and-split folded into the

@@ -56,8 +56,8 @@ object StoreCompaction {
     if (!fs.exists(done)) {
       val dirs = sourceDirs()
       if (dirs.size <= 1) return
-      val src = spark.read.option("basePath", treePath)
-        .parquet(dirs.map(_.toString): _*)
+      val src = graft.sources.Parquet
+        .readTree(spark, treePath, dirs.map(_.toString): _*)
       val dataCols = src.columns.filter(_ != "batch_id").map(col)
       val compacted = src.select(dataCols: _*)
       val laidOut = innerPartition match {

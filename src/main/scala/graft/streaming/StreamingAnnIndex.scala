@@ -103,7 +103,7 @@ object StreamingAnnIndex {
   /** The whole index as one frame (batch_id, cid partition columns +
     * posting rows). `basePath` keeps the partition columns visible. */
   def readIndex(spark: SparkSession, store: String): DataFrame =
-    spark.read.option("basePath", store).parquet(store)
+    graft.sources.Parquet.readTree(spark, store)
 
   /** Approximate top-k against the incrementally-built store — same
     * semantics, schema and tie-breaking as [[graft.sim.Ann.ivfTopK]]

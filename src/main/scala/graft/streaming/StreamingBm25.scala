@@ -124,9 +124,7 @@ object StreamingBm25 {
     // the probed bucket set is metadata-scale: ≤ probes × nTerms values
     val probedTkb = qterms.select(tkb(col("token")).as("b")).distinct()
       .collect().map(_.getInt(0))
-    val postings = spark.read
-      .option("basePath", s"$store/postings")
-      .parquet(s"$store/postings")
+    val postings = graft.sources.Parquet.readTree(spark, s"$store/postings")
       .where(col("tkb").isin(probedTkb.map(_.asInstanceOf[Any]): _*))
       .select(col("token"), col("doc_id"), col("tf"), col("dl"))
     val scored = postings.join(qterms, "token")

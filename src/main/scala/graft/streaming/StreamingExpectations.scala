@@ -45,6 +45,6 @@ object StreamingExpectations {
   def readReport(
       spark: org.apache.spark.sql.SparkSession,
       metricsPath: String): DataFrame =
-    spark.read.parquet(metricsPath)
+    graft.sources.Parquet.read(spark, metricsPath)
       .dropDuplicates("batch_id", "constraint_name")
 }

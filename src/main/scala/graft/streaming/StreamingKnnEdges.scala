@@ -49,8 +49,7 @@ object StreamingKnnEdges {
       spark: SparkSession,
       store: String,
       upto: Long = Long.MaxValue): DataFrame =
-    spark.read.option("basePath", s"$store/vectors")
-      .parquet(s"$store/vectors")
+    graft.sources.Parquet.readTree(spark, s"$store/vectors")
       .where(col("batch_id") <= upto)
       .select(col("id"), col("v"))
 

@@ -55,7 +55,7 @@ object VersionedStore {
       path: String,
       before: Long = Long.MaxValue): Option[DataFrame] = {
     val paths = VersionPrune.versions(spark, path, before).map(v => s"$path/v$v")
-    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+    if (paths.isEmpty) None else Some(graft.sources.Parquet.read(spark, paths: _*))
   }
 
   /** Run `kernel(batch, batchId)` on every micro-batch of `stream`,

@@ -37,6 +37,15 @@ class PlanRegressionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("the perfbench dashboards build their DataFrames without a Spark job") {
+    // every table load takes its schema from a driver-side footer read;
+    // Spark's schema inference would run one job per table loaded
+    val jobs = Seq("q10_dashboard_revenue", "q11_dashboard_topn",
+        "q19_rollup_dashboard", "q60_pivot_dashboard")
+      .map(q => q -> JobCount.of(spark)(SparkEntry.queries(q)(spark, sfDir)))
+    assert(jobs.forall(_._2 == 0), s"jobs before any action: $jobs")
+  }
+
   test("q01 filter reaches the parquet scan (PushedFilters non-empty)") {
     val plan = finalPlan(SparkEntry.queries("q01_clean_filter")(spark, sfDir))
     assert(plan.contains("PushedFilters: ["), plan)

@@ -14,7 +14,8 @@ round-11 35-minute incident. --timeout (default 900 s) interrupts any
 single oracle that overruns, so a mis-skipped all-pairs oracle fails
 fast and visibly.)
 
-Also emits RECALL_SELF.json (next to the verify dir and in cwd): the
+Also writes RECALL_SELF.json into <verifyOutDir> (never the working
+directory, so a gate run leaves the committed copy alone): the
 machine-readable affirmative gate for the no-oracle queries — per
 query the planted_ok verdict plus, when present, measured_recall /
 recall_floor / recall_ok and the q58/q87-style in-query audit flags.
@@ -189,15 +190,10 @@ def main():
             print(f"{name}: MISSING SPARK OUTPUT (query failed)")
             results[name] = ["missing spark output"]
     if recall:
-        payload = json.dumps(recall, indent=1, sort_keys=True)
-        for dest in (os.path.join(out_dir, "RECALL_SELF.json"),
-                     "RECALL_SELF.json"):
-            try:
-                with open(dest, "w") as f:
-                    f.write(payload)
-            except OSError:
-                pass
-        print(f"recall sidecar: {len(recall)} no-oracle queries -> RECALL_SELF.json")
+        dest = os.path.join(out_dir, "RECALL_SELF.json")
+        with open(dest, "w") as f:
+            f.write(json.dumps(recall, indent=1, sort_keys=True))
+        print(f"recall sidecar: {len(recall)} no-oracle queries -> {dest}")
     n_bad = sum(1 for v in results.values() if v)
     print(f"\n{len(results) - n_bad}/{len(results)} green")
     sys.exit(0 if n_bad == 0 else 1)
