@@ -36,9 +36,11 @@ import org.apache.spark.sql.functions._
   * customers and event users replicate with the facts), while the
   * slowly-growing DIMENSIONS (part, supplier, region, nation) copy
   * verbatim — 10× facts against fixed dims is exactly the broadcast-
-  * join shape the operators must keep at scale. `events.ts` stays the
-  * raw INT64 nanos long ([[graft.sources.Tables.events]] converts on
-  * read either way).
+  * join shape the operators must keep at scale. `events.ts` keeps its
+  * source encoding: a NANOS source is read (and written back) as the
+  * raw INT64 nanos long under `nanosAsLong`, which is set only for that
+  * encoding, as [[graft.sources.Tables.events]] does; it converts on
+  * read either way.
   *
   * Usage: `runMain graft.ScaleGen <srcDir> <outDir> [factor=10] [tables=docs|all]`
   */
@@ -95,7 +97,8 @@ object ScaleGen {
       .parquet(s"$out/embeddings.parquet")
 
     if (args.length > 3 && args(3) == "all") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      if (graft.sources.Parquet.nanosTimestamp(spark, s"$src/events.parquet", "ts"))
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val off = col("rep").cast("long") * 10000000L
       def scaled(table: String)(remap: DataFrame => DataFrame): Unit =
         remap(spark.read.parquet(s"$src/$table.parquet")

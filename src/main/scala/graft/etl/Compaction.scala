@@ -24,11 +24,12 @@ import org.apache.spark.sql.functions._
   * Scale shape: the input is FILE METADATA (millions of rows for a
   * 100 TB table — never data), but the prefix sum is still computed
   * bucket-parallel, not through one global-window task: range-partition
-  * on the order, in-partition running sums, then one broadcast join
-  * against the per-partition byte offsets (the
-  * [[SurrogateKeys.assign]] two-phase shape; the offsets frame is
-  * numPartitions rows). All arithmetic is integer-exact, so the plan
-  * hash-matches a single-window SQL oracle.
+  * on the order, in-partition running sums, then each partition shifted
+  * by the bytes of the partitions before it — per-partition totals from
+  * one Spark job, added as a literal array indexed by the partition id
+  * (the [[SurrogateKeys.assign]] two-phase shape, through the same
+  * helper). All arithmetic is integer-exact, so the plan hash-matches a
+  * single-window SQL oracle.
   */
 object Compaction {
 
@@ -42,34 +43,23 @@ object Compaction {
       targetBytes: Long): DataFrame = {
     require(targetBytes > 0, s"targetBytes must be > 0, got $targetBytes")
     val ord = Seq(col(bytesCol).desc, col(fileIdCol).asc)
-    // Lazy checkpoint pins ONE partition layout for the two consumers
-    // (offsets aggregate + join): separately-executed subplans may be
-    // AQE-coalesced into different layouts, and pids present in one
-    // evaluation but not the other would drop rows through the join
-    // (the SurrogateKeys.assign lesson).
+    // The checkpoint pins ONE partition layout for the byte-total job
+    // and the running-sum read: separately executed subplans may be
+    // AQE-coalesced into different layouts, and totals taken from one
+    // would shift the other (the SurrogateKeys.assign lesson).
     val local = graft.util.Blocks.lazyCheckpoint(
       files.repartitionByRange(ord: _*)
         .sortWithinPartitions(ord: _*)
         .withColumn("_cp_pid",
           shiftright(monotonically_increasing_id(), 33)))
-    val localRun = local.withColumn("_cp_cum_local",
-      sum(col(bytesCol)).over(
-        Window.partitionBy(col("_cp_pid")).orderBy(ord: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    // per-partition byte offsets: numPartitions rows — the only global
-    // window in the plan runs over metadata-of-metadata
-    val offsets = local.groupBy(col("_cp_pid"))
-      .agg(sum(col(bytesCol)).as("_cp_bytes"))
-      .withColumn("_cp_offset",
-        coalesce(sum(col("_cp_bytes")).over(
-          Window.orderBy(col("_cp_pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_cp_pid"), col("_cp_offset"))
-    localRun.join(broadcast(offsets), "_cp_pid")
-      .withColumn("_cp_cum", col("_cp_cum_local") + col("_cp_offset"))
+    local.withColumn("_cp_cum",
+        sum(col(bytesCol)).over(
+          Window.partitionBy(col("_cp_pid")).orderBy(ord: _*)
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)) +
+          SurrogateKeys.partitionOffset(local, "_cp_pid", col(bytesCol)))
       .withColumn("bin",
         expr(s"(_cp_cum - $bytesCol) div ${targetBytes}L"))
-      .drop("_cp_pid", "_cp_cum_local", "_cp_cum")
+      .drop("_cp_pid", "_cp_cum")
   }
 
   /** Per-bin rollup of a [[planSortedFill]] plan: rewrite work list

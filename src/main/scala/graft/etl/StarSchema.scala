@@ -38,11 +38,18 @@ object StarSchema {
 
   /** Cross-join-of-distincts dimension
     * (reference: DAG `create_packaging_dim` — DISTINCT pack × DISTINCT
-    * bottle_volume_ml). Both sides are tiny distinct sets, so the cross
-    * join is broadcast and cheap at any fact scale. */
+    * bottle_volume_ml). Both sides are tiny distinct sets, so ONE
+    * aggregate over `src` collects both (one exchange, one partial set
+    * per input task) and two explodes form the product — no distinct
+    * exchanges, no broadcast. Each value is wrapped in a one-field
+    * struct, which `collect_set` keeps even when the field is NULL: a
+    * bare `collect_set` would drop the NULL member that SQL's
+    * `SELECT DISTINCT` keeps. */
   def crossDim(src: DataFrame, colA: String, colB: String): DataFrame =
-    src.select(col(colA)).distinct()
-      .crossJoin(broadcast(src.select(col(colB)).distinct()))
+    src.agg(collect_set(struct(col(colA))).as("_xa"),
+        collect_set(struct(col(colB))).as("_xb"))
+      .select(inline(col("_xa")), col("_xb"))
+      .select(col(colA), inline(col("_xb")))
 
   /** Bidirectional name↔number backfill from a lookup dimension.
     *

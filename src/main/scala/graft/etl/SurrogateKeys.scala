@@ -1,7 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Deterministic dense surrogate keys for dimension tables.
@@ -21,7 +21,10 @@ import org.apache.spark.sql.functions._
   * ONE task, so [[assign]] is two-phase instead — range-repartition on
   * the order columns, number rows within each partition (narrow), then
   * shift each partition by the exact row counts of the partitions before
-  * it (a P-row aggregate, P = shuffle partitions). Dimensions are
+  * it. The counts come from one Spark job over the checkpointed
+  * numbering (P longs to the driver, P = its partition count) and ride
+  * back into the plan as a literal array indexed by the partition id:
+  * no aggregate, no global window, no broadcast join. Dimensions are
   * usually metadata-scale, but this shape also survives a billion-row
   * dim.
   */
@@ -46,24 +49,32 @@ object SurrogateKeys {
     // earlier partitions IS the global dense rank. A pid-partitioned
     // row_number window would re-shuffle the whole dim (range
     // partitioning doesn't satisfy hash-on-pid); this stays narrow.
-    // materialized ONCE (lazy localCheckpoint): the frame has two
-    // consumers (the offsets aggregate and the join below), and two
-    // separate SQL executions of the same subplan may be AQE-coalesced
-    // into DIFFERENT partition layouts — pids present in one evaluation
-    // but not the other would silently drop rows through the inner
-    // join (observed at sf0.1: 15k-row dim lost half its rows). The
-    // checkpoint pins one layout; blocks are GC-released with the frame.
+    // The checkpoint pins ONE partition layout for the count job and
+    // the numbering read: two separate executions of the subplan may be
+    // AQE-coalesced into DIFFERENT layouts, and counts taken from one
+    // would misnumber the other (observed at sf0.1 with a join-based
+    // offsets frame: a 15k-row dim lost half its rows).
     val local = graft.util.Blocks.lazyCheckpoint(numberedLocal(dim, ord))
-    val offsets = local.groupBy(col("_sk_pid")).agg(count(lit(1)).as("_sk_n"))
-      .withColumn("_sk_offset",
-        coalesce(sum(col("_sk_n")).over(
-          Window.orderBy(col("_sk_pid")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col("_sk_pid"), col("_sk_offset"))
-    local.join(broadcast(offsets), "_sk_pid")
-      .withColumn(keyName,
-        (col("_sk_local") + col("_sk_offset") + lit(1L) + lit(startOffset)).cast("long"))
-      .drop("_sk_mid", "_sk_pid", "_sk_local", "_sk_offset")
+    local
+      .withColumn(keyName, (col("_sk_local") +
+        partitionOffset(local, "_sk_pid", lit(1L)) + lit(1L + startOffset)).cast("long"))
+      .drop("_sk_mid", "_sk_pid", "_sk_local")
+  }
+
+  /** The offset of each row's partition in a checkpointed frame whose
+    * partition i holds exactly the rows with `pidCol == i` (a pid
+    * decoded from `monotonically_increasing_id` before the checkpoint):
+    * the sum of the integral `weight` (NULL counts 0) over partitions
+    * 0 .. i−1. ONE Spark job computes the per-partition totals on the
+    * checkpoint's RDD — it also fills the checkpoint, so the frame's
+    * consumer reads blocks — and the prefix sums return as a literal
+    * array indexed by `pidCol`. */
+  private[etl] def partitionOffset(
+      local: DataFrame, pidCol: String, weight: Column): Column = {
+    val rows = local.select(coalesce(weight.cast("long"), lit(0L))).queryExecution.toRdd
+    val totals = local.sparkSession.sparkContext.runJob(rows,
+      (it: Iterator[InternalRow]) => it.foldLeft(0L)(_ + _.getLong(0)))
+    element_at(typedLit(totals.scanLeft(0L)(_ + _).init.toSeq), col(pidCol).cast("int") + 1)
   }
 
   /** The pre-checkpoint numbering frame: range-partitioned on the order
@@ -83,9 +94,9 @@ object SurrogateKeys {
     * every existing id (the IDENTITY property: ids never change once
     * issued). Incoming rows whose natural key already exists are
     * dropped; genuinely new rows get dense ids continuing from the
-    * current max, in the canonical order of `orderCols`. Stays fully
-    * lazy — the max rides along as a broadcast one-row aggregate, not a
-    * driver action.
+    * current max, in the canonical order of `orderCols`. The max rides
+    * along as a broadcast one-row aggregate, not a driver action; the
+    * [[assign]] of the new rows runs its jobs at the call.
     */
   def extend(
       existing: DataFrame,

@@ -79,10 +79,12 @@ object PipelineQueries {
     * until an explicit unpersist, leaking blocks in a long-lived session
     * that invokes these queries repeatedly), checkpoint blocks are
     * released by the ContextCleaner as soon as the returned frame is
-    * garbage-collected; and unlike an EAGER checkpoint, merely BUILDING
-    * the query (graft.Explain's plan audit) runs no jobs — work happens
-    * at first consumption. Trade-off: the checkpoint truncates lineage,
-    * so these queries' printed plans end at a Scan ExistingRDD. */
+    * garbage-collected; and unlike an EAGER checkpoint, the final stage
+    * waits for first consumption (building the query still runs the
+    * shuffle stages of `out` under AQE — see
+    * [[graft.util.Blocks.lazyCheckpoint]]). Trade-off: the checkpoint
+    * truncates lineage, so these queries' printed plans end at a Scan
+    * ExistingRDD. */
   private def withPlantedCheck(
       out: DataFrame,
       cond: org.apache.spark.sql.Column): DataFrame = {

@@ -4,11 +4,13 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** The library's one parquet reader. A bare `spark.read.parquet(path)`
@@ -59,8 +61,31 @@ object Parquet {
   private def footerSchema(
       spark: SparkSession, paths: Seq[String]): Option[StructType] = {
     val conf = spark.sessionState.conf
-    if (paths.isEmpty || conf.isParquetSchemaMergingEnabled ||
-        paths.exists(_.exists(GlobChars))) None
+    if (conf.isParquetSchemaMergingEnabled) None
+    else footer(spark, paths).flatMap { f =>
+      try Some(ParquetFileFormat.readSchemaFromFooter(
+        f, new ParquetToSparkSchemaConverter(conf)))
+      catch { case NonFatal(_) => None }
+    }
+  }
+
+  /** True when the footer [[read]] takes the schema from stores
+    * `column` as INT64 TIMESTAMP(NANOS), the encoding Spark reads only
+    * under `spark.sql.legacy.parquet.nanosAsLong`. */
+  private[graft] def nanosTimestamp(spark: SparkSession, path: String, column: String): Boolean =
+    footer(spark, Seq(path)).exists(_.getParquetMetadata.getFileMetaData.getSchema
+      .getFields.asScala.exists { f =>
+        f.getName == column && (f.getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        })
+      })
+
+  /** The footer of the first visible data file of `paths`, in path
+    * order; None for no paths, a glob, no data file or an unreadable
+    * footer. */
+  private def footer(spark: SparkSession, paths: Seq[String]): Option[Footer] =
+    if (paths.isEmpty || paths.exists(_.exists(GlobChars))) None
     else try {
       val hadoopConf = spark.sessionState.newHadoopConf()
       paths.map(new Path(_)).sortBy(_.toString).iterator
@@ -70,13 +95,10 @@ object Parquet {
         }
         .nextOption()
         .map { file =>
-          val meta = ParquetFooterReader.readFooter(
-            HadoopInputFile.fromStatus(file, hadoopConf), SKIP_ROW_GROUPS)
-          ParquetFileFormat.readSchemaFromFooter(
-            new Footer(file.getPath, meta), new ParquetToSparkSchemaConverter(conf))
+          new Footer(file.getPath, ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(file, hadoopConf), SKIP_ROW_GROUPS))
         }
     } catch { case NonFatal(_) => None }
-  }
 
   /** Spark's glob metacharacters (`SparkHadoopUtil.isGlobPath`). */
   private val GlobChars = "{}[]*?\\".toSet

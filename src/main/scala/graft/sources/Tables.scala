@@ -70,9 +70,14 @@ object Tables {
     * TIMESTAMP_NTZ — cast to the session-zoned type so downstream
     * date/window functions see the exact same TimestampType either
     * way; the session zone is pinned UTC, so the cast is wall-clock
-    * neutral). Dispatch on the loaded type, not the generation. */
+    * neutral). Dispatch on the loaded type, not the generation.
+    * `spark.sql.legacy.parquet.nanosAsLong` is set on the session only
+    * when the table's footer shows the NANOS encoding — the scan reads
+    * it when it runs, so it stays set after such a load; a MICROS load
+    * leaves the session conf unchanged. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (Parquet.nanosTimestamp(s, s"$d/events.parquet", "ts"))
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = load(s, d, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -54,12 +54,16 @@ object Blocks {
   }
 
   /** LAZY local checkpoint with the same serialized storage as
-    * [[checkpoint]]: materializes at first consumption (building the
-    * plan runs no jobs — graft.Explain stays cheap), blocks are
-    * GC/ContextCleaner-released with the frame. For multi-consumer
-    * intermediates inside a query whose lifetime matches the returned
-    * frame's, where an eager handle has no deterministic release point
-    * anyway. */
+    * [[checkpoint]]: the rows are stored at first consumption, and the
+    * blocks are GC/ContextCleaner-released with the frame. The call is
+    * not free under AQE: `Dataset.localCheckpoint` runs
+    * `executedPlan.execute()`, which materializes every shuffle stage
+    * of the plan at the call (measured with Spark 4.1 at local[4]: a
+    * `repartitionByRange` plan submits 2 jobs, a `groupBy` plan 1);
+    * only the final stage waits for the first consumer. For
+    * multi-consumer intermediates inside a query whose lifetime matches
+    * the returned frame's, where an eager handle has no deterministic
+    * release point anyway. */
   def lazyCheckpoint(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = false,
       storageLevel = StorageLevel.MEMORY_AND_DISK_SER)

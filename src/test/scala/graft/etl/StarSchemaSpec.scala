@@ -48,5 +48,16 @@ class StarSchemaSpec extends SparkSpec {
   test("crossDim is the cross product of distincts") {
     val src = Seq(("a", 1), ("a", 2), ("b", 1)).toDF("x", "y")
     assert(StarSchema.crossDim(src, "x", "y").count() === 4)
+    // a NULL on each side is a member of its distinct set, as in SQL's
+    // SELECT DISTINCT: distinct(x) × distinct(y), NULLs included
+    val rows = Seq((Some("a"), Some(1)), (None, Some(2)), (Some("b"), None),
+      (Some("a"), Some(2)), (None, None))
+    val withNulls = StarSchema.crossDim(rows.toDF("x", "y"), "x", "y")
+    assert(withNulls.columns.toSeq === Seq("x", "y"))
+    val got = withNulls.as[(Option[String], Option[Int])].collect().toSeq
+    val expected = for (x <- rows.map(_._1).distinct; y <- rows.map(_._2).distinct)
+      yield (x, y)
+    assert(got.size === expected.size)
+    assert(got.toSet === expected.toSet)
   }
 }

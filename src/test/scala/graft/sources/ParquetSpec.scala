@@ -35,7 +35,6 @@ class ParquetSpec extends SparkSpec {
 
   for (dir <- sfDirs) {
     test(s"every table of ${dir.split('/').last}: same schema and rows as spark.read.parquet") {
-      Tables.events(spark, dir) // sets nanosAsLong, as any events load does
       tables.foreach { t =>
         assertSame(Tables.load(spark, dir, t), spark.read.parquet(s"$dir/$t.parquet"))
       }
@@ -149,5 +148,41 @@ class ParquetSpec extends SparkSpec {
       "auditParquet" -> JobCount.of(spark)(
         SchemaAudit.auditParquet(spark, s"$dir/region.parquet", contract)))
     assert(jobs.forall(_._2 == 0), s"jobs: $jobs")
+  }
+
+  private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+
+  test("an events load over TIMESTAMP(MICROS) data leaves the session conf unchanged") {
+    val before = spark.conf.getOption(NanosKey)
+    for (dir <- sfDirs) {
+      assert(!Parquet.nanosTimestamp(spark, s"$dir/events.parquet", "ts"), dir)
+      Tables.events(spark, dir).collect()
+      assert(spark.conf.getOption(NanosKey) === before, dir)
+    }
+  }
+
+  test("an events load over TIMESTAMP(NANOS) data sets nanosAsLong and converts ts") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = tmp("pqnanos")
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val writer = ExampleParquetWriter
+      .builder(new Path(s"$dir/events.parquet/part-00000.parquet"))
+      .withType(schema).build()
+    val nanos = 1700000000123456789L
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", nanos))
+    finally writer.close()
+    val before = spark.conf.getOption(NanosKey)
+    try {
+      spark.conf.unset(NanosKey)
+      assert(Parquet.nanosTimestamp(spark, s"$dir/events.parquet", "ts"))
+      val micros = Tables.events(spark, dir).select(unix_micros(col("ts"))).as[Long].head()
+      assert(micros === nanos / 1000)
+      assert(spark.conf.get(NanosKey) === "true")
+    } finally before.fold(spark.conf.unset(NanosKey))(spark.conf.set(NanosKey, _))
   }
 }
