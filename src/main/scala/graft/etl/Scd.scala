@@ -100,11 +100,12 @@ object Scd {
     * collects update rows to the driver and issues per-row UPDATEs, both
     * outputs stay distributed DataFrames for MERGE-style sinks.
     *
-    * Periods match with `===`, the SQL `=` of q13's oracle, so a period
-    * with a NULL attribute never matches itself: it is returned in
-    * `toInsert` again by every call. The streaming merge
-    * ([[graft.streaming.IncrementalPipeline.processBatch]]) groups NULLs
-    * as equal instead and carries such a period over unchanged.
+    * Periods match with `<=>` (q13's oracle: `IS NOT DISTINCT FROM`),
+    * so a NULL attribute equals NULL, as in the rebuild's grouping and
+    * in the streaming merge
+    * ([[graft.streaming.IncrementalPipeline.processBatch]]): a period
+    * with a NULL attribute that a batch leaves alone is in neither
+    * output, and one that a batch closes is in `toUpdate`.
     */
   def scdUpsert(
       oldScd: DataFrame,
@@ -127,7 +128,7 @@ object Scd {
         .zipWithIndex.map { case (c, i) => col(c).as(s"_pk${i}$suffix") }: _*)
     def periodMatch(d: DataFrame, suffix: String) =
       (naturalKey +: attrs :+ "start_date").zipWithIndex
-        .map { case (c, i) => d(c) === col(s"_pk${i}$suffix") }
+        .map { case (c, i) => d(c) <=> col(s"_pk${i}$suffix") }
         .reduce(_ && _)
 
     val oldCurrent = periodKey(oldScd.where(col("is_current")), "c")

@@ -19,8 +19,13 @@ object Spread {
 
   /** Repartition `df` by `key` iff it has fewer partitions than
     * `minPartitions` (default: the cluster's default parallelism —
-    * below that, cores sit idle). Computing the partition count forces
-    * file listing on a scan, which the query would pay anyway.
+    * below that, cores sit idle). Reading the partition count
+    * (`df.rdd.getNumPartitions`) plans the frame; whether that submits
+    * a job depends on the plan (measured with Spark 4.1 at local[4]): 0
+    * jobs on a scan, or on a scan ∪ local relation, but 1 job on a
+    * `repartition` plan and 1 on a `groupBy` plan, because AQE runs
+    * their shuffle stages to plan the rest. Apply the spread to a
+    * source, not to a shuffled frame.
     *
     * The spread is ADVISORY (`repartition(key)`, no count): AQE may
     * re-coalesce it by bytes, which is right for ordinary pipelines —
@@ -53,7 +58,14 @@ object Spread {
     * input is UNDER-partitioned (small corpora), where
     * `defaultParallelism` partitions is the correct spread; at scale
     * the input already splits past the floor and no plan node is
-    * added at all. */
+    * added at all.
+    *
+    * A spread moves only the work that stays above the exchange: a
+    * caller's filter is pushed through a `RepartitionByExpression`
+    * into the one scan task, together with every column expression it
+    * references. An operator that owns its spread therefore
+    * checkpoints its projection over the spread frame
+    * ([[graft.text.GopherRules.annotate]] does). */
   def byKeyStrict(
       df: DataFrame,
       key: Column,

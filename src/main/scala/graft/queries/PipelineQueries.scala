@@ -21,18 +21,26 @@ object PipelineQueries {
   private def docsSpread(s: SparkSession, dir: String): DataFrame =
     graft.etl.Spread.byKeyIfNarrow(Tables.documents(s, dir), col("doc_id"))
 
-  /** Strict spread for queries whose per-ROW cost dwarfs their bytes
-    * — the perceptual codecs (PNG/GIF/JPEG/WAV build + decode + hash
-    * per row) and the md5-token-bucket streams (~1 md5 per token:
-    * q34/q35/q100/q112/q120 and the LR family burn seconds of CPU in
-    * the post-spread stage). AQE's BYTE-based coalescing re-fuses an
-    * advisory spread of such stages onto 1-10 cores (measured: the
-    * whole PNG stage single-threaded, the q34 bucket stream 7.2 s of
-    * CPU on 10 tasks at sf0.1); [[graft.etl.Spread.byKeyStrict]] pins
-    * the partition count so these stages keep the cluster's
-    * parallelism. Iterative many-tiny-stage families (ANN) stay on the
-    * advisory spread — strictness over-parallelizes them (measured
-    * +0.5-0.7 s/query in round 16). */
+  /** Strict spread for queries whose per-ROW cost dwarfs their bytes.
+    * AQE's BYTE-based coalescing re-fuses an advisory spread of such
+    * stages onto 1-10 cores (measured: the whole PNG stage
+    * single-threaded, the q34 bucket stream 7.2 s of CPU on 10 tasks at
+    * sf0.1); [[graft.etl.Spread.byKeyStrict]] pins the partition count
+    * so these stages keep the cluster's parallelism. The remaining
+    * callers, and why the spread stays here rather than in an operator:
+    *  - q34 and q127-q129 (md5-token-bucket streams, ~1 md5 per token,
+    *    into the Importance and LR cores): moving the strict spread
+    *    into the LR train core measured slower on perfbench's curation
+    *    build, because there it spreads an input of only 2-3
+    *    partitions; it waits for a tier helper that can tell the two
+    *    inputs apart;
+    *  - `seededCorpus` and q150 (the perceptual codecs: PNG/GIF/JPEG/
+    *    WAV build + decode + hash per row): the per-row work is a
+    *    Column expression, so no operator exists to own the spread.
+    * The Gopher rules (q110, q130) spread inside
+    * [[graft.text.GopherRules.annotate]]. Iterative many-tiny-stage
+    * families (ANN) stay on the advisory spread — strictness
+    * over-parallelizes them (measured +0.5-0.7 s/query in round 16). */
   private def docsSpreadCpu(s: SparkSession, dir: String): DataFrame =
     graft.etl.Spread.byKeyStrict(Tables.documents(s, dir), col("doc_id"))
 
@@ -1024,10 +1032,13 @@ object PipelineQueries {
       (-403L, "too short"),
       (-404L, Seq.fill(6)("pneumonoultramicroscopicsilicovolcanoconiosis")
         .mkString(" "))).toDF("doc_id", "text")
-    val docs = docsSpreadCpu(s, dir).select(col("doc_id"), col("text"))
-      .unionByName(planted)
-    graft.text.GopherRules.annotate(docs, "text",
-        graft.text.GopherRules.Thresholds(minWords = 5, minStopWords = 1))
+    // annotate each side before the union: the planted rows are a
+    // local relation of several partitions, which would hide the
+    // one-task corpus scan from annotate's partition count
+    val rules = (d: DataFrame) => graft.text.GopherRules.annotate(d, "text",
+      graft.text.GopherRules.Thresholds(minWords = 5, minStopWords = 1))
+    rules(Tables.documents(s, dir).select(col("doc_id"), col("text")))
+      .unionByName(rules(planted))
       .select(col("doc_id"), col("n_words"), col("mean_word_len"),
         col("symbol_ratio"), col("bullet_frac"), col("ellipsis_frac"),
         col("alpha_word_frac"), col("n_stop_words"),
@@ -3406,20 +3417,16 @@ object PipelineQueries {
     val planted = (0 until 4).map { i =>
       (-410L - i, "planted", s"$familyBase variant tail number $i")
     }.toDF("doc_id", "source", "text")
-    val base = docsSpreadCpu(s, dir)
+    val base = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("lang"), col("text"))
-    // 1+2. Gopher rules (q110 thresholds) + PII scrub in ONE
-    // materialized projection, with the gopher verdict applied AFTER
-    // the checkpoint: a bare `.where(gopher_ok)` substitutes the whole
-    // ~10-regex verdict tree into the filter, which Catalyst pushes
-    // below the docsSpread repartition INTO the single-row-group scan
-    // task — the entire rule pass ran single-threaded (measured 2.25 s
-    // on one core at sf0.1; the jaccardJoin `where(n > 0)` trap).
-    // Keeping the verdict a projected column inside the checkpoint
-    // evaluates it post-exchange across the cluster; the filter then
-    // reads a materialized boolean. Scrub-before-filter is
-    // output-identical (dropped rows are dropped either way; the
-    // verdict is computed on the UNscrubbed text exactly as before).
+    // 1+2. Gopher rules (q110 thresholds) + PII scrub. annotate spreads
+    // the one-task corpus scan itself and returns a checkpointed
+    // verdict, so the `.where(gopher_ok)` below reads a stored boolean
+    // on every core (see GopherRules.annotate for the pushdown trap).
+    // The scrub is materialized here too, because three consumers
+    // (LR train, LR score, the keep join) read it. Scrub-before-filter
+    // is output-identical (dropped rows are dropped either way; the
+    // verdict is computed on the UNscrubbed text).
     val annotatedScrubbed = graft.util.Blocks.lazyCheckpoint(
       graft.text.GopherRules.annotate(base, "text",
           graft.text.GopherRules.Thresholds(minWords = 5, minStopWords = 1))

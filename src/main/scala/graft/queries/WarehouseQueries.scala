@@ -372,13 +372,13 @@ object WarehouseQueries {
       |                n.end_date, n.end_date IS NULL AS is_current
       |              FROM new_scd n
       |              JOIN (SELECT user_id, event_type, start_date FROM old_scd WHERE end_date IS NULL) o
-      |                ON n.user_id = o.user_id AND n.event_type = o.event_type AND n.start_date = o.start_date
+      |                ON n.user_id = o.user_id AND n.event_type IS NOT DISTINCT FROM o.event_type AND n.start_date = o.start_date
       |              WHERE n.end_date IS NOT NULL),
       |to_insert AS (SELECT 'insert' AS action, n.user_id, n.event_type, n.start_date,
       |                n.end_date, n.end_date IS NULL AS is_current
       |              FROM new_scd n
       |              WHERE NOT EXISTS (SELECT 1 FROM old_scd o
-      |                WHERE o.user_id = n.user_id AND o.event_type = n.event_type AND o.start_date = n.start_date))
+      |                WHERE o.user_id = n.user_id AND o.event_type IS NOT DISTINCT FROM n.event_type AND o.start_date = n.start_date))
       |SELECT * FROM to_update UNION ALL SELECT * FROM to_insert
       |ORDER BY action, user_id, start_date, event_type""".stripMargin
 

@@ -1,6 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.etl.Spread
+import graft.util.Blocks
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The Gopher/MassiveText document-quality rule pack (Rae et al. 2021
@@ -23,6 +25,8 @@ import org.apache.spark.sql.functions._
   * contract — so the whole pack is hash-exact against an ANSI-SQL
   * oracle. Scale shape: pure narrow projections; whatever aggregates
   * follow (verdict rollups, dataset cards) key on the caller's columns.
+  * At scale the input is already wide, so [[annotate]] adds no node;
+  * it spreads only an under-partitioned input.
   * Thresholds are parameters because the paper's absolute word-count
   * bounds presume web-scale documents; the defaults here are the
   * paper's.
@@ -46,8 +50,22 @@ object GopherRules {
   /** Adds the 7 metric columns, the 7 per-rule pass booleans and the
     * combined `gopher_ok` verdict. Empty/whitespace-only docs fail the
     * word-count rule (n_words = 0) and divide-by-zero ratios are
-    * defined as 0 via the n_words/n_lines guards. */
+    * defined as 0 via the n_words/n_lines guards.
+    *
+    * The rules cost ~15 regex passes per row, so the operator owns its
+    * spread: an input with fewer partitions than `defaultParallelism`
+    * (a one-row-group corpus scans as ONE task) is repartitioned to
+    * that count by the text column ([[graft.etl.Spread.byKeyStrict]])
+    * and the projection is returned through
+    * [[graft.util.Blocks.lazyCheckpoint]]. The checkpoint is what makes
+    * the spread work: over a bare spread, Catalyst pushes a caller's
+    * `.where(col("gopher_ok"))` below the exchange, and the whole
+    * verdict tree runs as a Filter in the one scan task again. It sits
+    * above the projection, so that pushed-down filter reads a stored
+    * boolean instead of re-evaluating the rules. A wide input gets the
+    * plain projection: no exchange, no checkpoint. */
   def annotate(df: DataFrame, textCol: String, t: Thresholds = Thresholds()): DataFrame = {
+    val spread = Spread.byKeyStrict(df, col(textCol))
     val text = col(textCol)
     val nWords = size(regexp_extract_all(text, lit("[^ \\t\\n\\r]+"), lit(0)))
       .cast("long")
@@ -78,7 +96,7 @@ object GopherRules {
       when(size(regexp_extract_all(lower(text),
         lit(s"(^|[^a-z0-9])$w([^a-z0-9]|$$)"), lit(0))) > 0, 1).otherwise(0)
     }.reduce(_ + _).cast("int")
-    df.withColumn("n_words", nWords)
+    val annotated = spread.withColumn("n_words", nWords)
       .withColumn("mean_word_len", meanLen)
       .withColumn("symbol_ratio", symbolRatio)
       .withColumn("bullet_frac", bulletFrac)
@@ -98,5 +116,6 @@ object GopherRules {
         col("r_words") && col("r_mean_len") && col("r_symbols") &&
           col("r_bullets") && col("r_ellipsis") && col("r_alpha") &&
           col("r_stop"))
+    if (spread eq df) annotated else Blocks.lazyCheckpoint(annotated)
   }
 }

@@ -74,10 +74,14 @@ class ScdSpec extends SparkSpec {
     // reference: test_merge_last_scd_record_with_scd_records_from_new_data
     // _both_having_same_attibutes — a later observation of the SAME value
     // folds into the existing current period
+    // key 2's attribute is NULL: NULL matches NULL, so its period is
+    // neither re-inserted nor updated
     val oldScd = Scd.scd2FromRecords(
-      Seq((1L, "A", d("2024-01-01"))).toDF("nk", "name", "d"),
+      Seq((1L, "A", d("2024-01-01")), (2L, null: String, d("2024-01-01")))
+        .toDF("nk", "name", "d"),
       "nk", Seq("name"), "d")
-    val newRecs = Seq((1L, "A", d("2024-01-20"))).toDF("nk", "name", "d")
+    val newRecs = Seq((1L, "A", d("2024-01-20")), (2L, null: String, d("2024-01-20")))
+      .toDF("nk", "name", "d")
     val (toUpdate, toInsert) = Scd.scdUpsert(oldScd, newRecs, "nk", Seq("name"), "d")
     assert(toUpdate.count() === 0)
     assert(toInsert.count() === 0)

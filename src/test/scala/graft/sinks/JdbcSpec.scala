@@ -81,6 +81,41 @@ class JdbcSpec extends SparkSpec {
     assert(k2.length === 1 && k2.head.getAs[Boolean]("is_current"))
   }
 
+  test("scdUpsert applied through applyScdUpsert closes a NULL-attribute period once") {
+    val url = freshDb()
+    val conn = DriverManager.getConnection(url)
+    try {
+      conn.createStatement().execute(
+        """CREATE TABLE DIM_NULL (
+          |  nk BIGINT, name VARCHAR(64), start_date DATE, end_date DATE,
+          |  is_current BOOLEAN)""".stripMargin)
+      conn.createStatement().execute(
+        "INSERT INTO DIM_NULL VALUES (1, NULL, DATE('2024-01-01'), NULL, TRUE)")
+    } finally conn.close()
+
+    def table() = lower(spark.read.jdbc(url, "DIM_NULL", new java.util.Properties))
+    def apply(batch: Seq[(Long, String, java.sql.Date)]): Unit = {
+      val (upd, ins) = graft.etl.Scd.scdUpsert(table(),
+        batch.toDF("nk", "name", "d"), "nk", Seq("name"), "d")
+      Jdbc.applyScdUpsert(upd, ins, url, "DIM_NULL",
+        keyCols = Seq("nk", "start_date"), maxConnections = 2)
+    }
+    def rows() = table().orderBy("start_date").collect()
+      .map(r => (Option(r.getAs[String]("name")),
+        Option(r.getAs[java.sql.Date]("end_date")).map(_.toString),
+        r.getAs[Boolean]("is_current"))).toSeq
+
+    apply(Seq((1L, "B", d("2024-01-05"))))
+    val closed = Seq(
+      (None, Some("2024-01-05"), false),
+      (Some("B"), None, true))
+    assert(rows() === closed)
+    // an empty batch changes nothing, however often it is applied
+    apply(Nil)
+    apply(Nil)
+    assert(rows() === closed)
+  }
+
   test("readNewerThan pushes the watermark predicate; readPartitioned strides") {
     val url = freshDb()
     Jdbc.writeTable(dimRows, url, "DIM_INC", SaveMode.Overwrite)
